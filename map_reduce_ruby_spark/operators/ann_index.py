@@ -9,14 +9,20 @@ materialized to parquet so a RESTARTED session (or another cluster) probes
 the stored index without retraining. A session-memoized ``.cache()`` was the
 round-5 stand-in; a restart retrained — this is the real thing, mirroring
 the reference's deploy story of persisting intermediate artifacts between
-phases (/root/reference/README.md:60-84, reducer.rb add_chunk ingest).
+phases (reference README.md:60-84, reducer.rb add_chunk ingest).
 
-Layout (all under one index root):
+The three artifacts — IVF, PQ and the composed IVFADC table — are
+``GenerationStore`` values (operators/artifact_store.py): build, exists,
+append, compact and load are the one protocol written there; this module
+holds what to train or encode, the stage writers and the side-table
+readers. Layout (one root per artifact):
 
-    <root>/cells/cell=<c>/*.parquet   (id, e)   — PARTITIONED by cell id
-    <root>/centroids/*.parquet        (cell, ce)
-    <root>/pq_codes/*.parquet         (id, code0..code{n_sub-1})
-    <root>/pq_books/*.parquet         (m, code, cw)
+    <root>/cells/ingest=<n>/cell=<c>/*.parquet   (id, e)  — IVF
+    <root>/centroids/*.parquet                   (cell, ce)
+    <root>/pq_codes/ingest=<n>/*.parquet         (id, code0..code{n_sub-1})
+    <root>/pq_books/*.parquet                    (m, code, cw)
+    <root>/codes/ingest=<n>/cell=<c>/*.parquet   (id, code0..)  — IVFADC
+    <root>/_META.json
 
 ``cells`` is directory-PARTITIONED on the probe key rather than bucketed:
 an IVF probe touches ``nprobe``/k of the cells, and the probe join's
@@ -37,14 +43,18 @@ search, byte-equal results, no retrain (file mtimes untouched).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from map_reduce_ruby_spark.operators.artifact_store import (
+    GenerationStore,
+    _compact_data_root,
+    _meta_stat,
+    _read_meta,
+    _scan_ingests,
+)
 from map_reduce_ruby_spark.operators.ivf import build_ivf_index
 from map_reduce_ruby_spark.operators.pq import build_pq_index
 
@@ -57,61 +67,11 @@ from map_reduce_ruby_spark.operators.pq import build_pq_index
 # on-disk layout (v3: per-ingest partition dirs).
 IVF_INDEX_VERSION = 3
 PQ_INDEX_VERSION = 3
+IVFADC_INDEX_VERSION = 1
 
-# The shared artifact-store protocol (meta versioning, staged-atomic
-# keep-winner publish, append lock, orphan reclamation, OPTIMIZE/VACUUM)
-# lives in operators/artifact_store.py; these names are re-exported here
-# for compatibility with existing importers.
-from map_reduce_ruby_spark.operators.artifact_store import (  # noqa: F401
-    _META_NAME,
-    _AppendLock,
-    _clean_orphan_stages,
-    _compact_data_root,
-    _data_committed,
-    _publish_atomic,
-    _read_meta,
-    _verify_meta_unchanged,
-    read_index_meta,
-    vacuum_index,
-)
-
-
-# Session-scoped memo of LOADED index artifacts, keyed on (session, path,
-# the meta's committed-ingest list, the meta file's stat). What it saves is
-# DRIVER time, not compute: every load re-lists the data root (up to
-# |ingests| x |cells| small files for IVF — partition discovery is
-# single-threaded driver work), re-reads parquet footers for schema, and
-# re-collects the centroid/codebook side table. The round-10 scaling block
-# measured the warm probe path driver-bound on exactly this
-# (knn_ivf_persisted ran FASTER on 8 cores than 32: ratio 0.42 — fixed
-# driver cost, zero parallel compute). Reusing the DataFrame object reuses
-# its InMemoryFileIndex, so a warm probe pays none of it. Correctness: any
-# append/compact rewrites _META.json atomically (new ingests + new
-# mtime/size), so the key rotates and a stale entry is never served;
-# vacuum only deletes RETIRED generations, which a live entry's scan never
-# listed. Bounded FIFO — entries hold no pinned cache, just plan objects.
-from collections import OrderedDict
-
-_LOAD_MEMO: OrderedDict = OrderedDict()
-_LOAD_MEMO_CAP = 16
-
-
-def _meta_stat(path: str):
-    try:
-        st = os.stat(os.path.join(path, _META_NAME))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-
-
-def _memo_get(key):
-    return _LOAD_MEMO.get(key)
-
-
-def _memo_put(key, value) -> None:
-    _LOAD_MEMO[key] = value
-    while len(_LOAD_MEMO) > _LOAD_MEMO_CAP:
-        _LOAD_MEMO.popitem(last=False)
+_IVF = GenerationStore("IVF index", "write_ivf_index", "cells", ("centroids",))
+_PQ = GenerationStore("PQ index", "write_pq_index", "pq_codes", ("pq_books",))
+_IVFADC = GenerationStore("IVFADC index", "write_ivfadc_index", "codes")
 
 
 def _ivf_meta(k: int | None) -> dict:
@@ -123,24 +83,22 @@ def _ivf_meta(k: int | None) -> dict:
     }
 
 
-
-
 def ivf_index_exists(path: str, k: int | None = None) -> bool:
-    """Fully committed (parquet _SUCCESS markers on every ingest partition
-    the meta lists) AND built by the CURRENT builder with the same
-    parameters (_META.json match) — a content-keyed cache hit on an index
-    trained by older code or other params is a miss, not a silent stale
-    load."""
-    meta = _read_meta(path)
-    return (
-        _data_committed(path, "cells")
-        and os.path.exists(os.path.join(path, "centroids", "_SUCCESS"))
-        and meta is not None
-        and {f: v
-        for f, v in meta.items()
-        if f not in ("batches", "ingests", "batch_ids", "retired")}
-        == _ivf_meta(k)
-    )
+    """Committed (cells generations and centroids) AND built by the
+    CURRENT builder with the same parameters — the generation store's
+    exists gate."""
+    return _IVF.exists(path, _ivf_meta(k))
+
+
+def _write_cells(assignments: DataFrame, dst: str) -> None:
+    # repartition ON cell before the partitionBy write: without it every
+    # writing task emits one file into every cell dir it holds rows for (up
+    # to tasks x k files — measured ~8k at sf0.1/k=256), and LOADS pay that
+    # count back as single-threaded driver partition discovery. Clustered,
+    # the tree holds ~1 file per cell. Same rows either way.
+    assignments.repartition(F.col("cell")).write.partitionBy("cell").mode(
+        "overwrite"
+    ).parquet(dst)
 
 
 def write_ivf_index(
@@ -151,43 +109,23 @@ def write_ivf_index(
     replace: bool = False,
 ) -> None:
     """Train (deterministic k-means, scale-adaptive k when ``k=None``) and
-    persist. The index is staged under a sibling temp root and published by
-    ONE atomic rename — concurrent or crashed builders can never expose a
-    torn index.
+    persist through the generation store's build: staged, published by
+    ONE rename, a valid existing index at the content-addressed path kept
+    as the winner; ``replace=True`` rebuilds over different data at the
+    same path (not reader-safe). ``append_ivf_batch`` is the incremental
+    ingest path (assign-only, centroids untouched)."""
 
-    CONTENT-ADDRESSED paths (the default, ``replace=False``): a path is
-    bound to its inputs — the deterministic builder means a VALID existing
-    index at the path already holds these bytes, so the publish keeps the
-    winner and discards the staging copy (never deleting a live index out
-    from under concurrent readers). Rebuilding over DIFFERENT data at the
-    same path requires ``replace=True``, which removes the old index first
-    and is therefore NOT safe under concurrent readers of that path.
-    ``append_ivf_batch`` is the incremental ingest path (assign-only,
-    centroids untouched)."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    assignments, centroids = build_ivf_index(vectors, k=k, iterations=2)
-    (
-        # repartition ON cell before the partitionBy write: without it every
-        # writing task emits one file into every cell dir it holds rows for
-        # (up to tasks x k files — measured ~8k at sf0.1/k=256), and LOADS
-        # pay that count back as single-threaded driver partition discovery.
-        # Clustered, the tree holds ~1 file per cell. Same rows either way.
-        assignments.repartition(F.col("cell"))
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(os.path.join(tmp, "cells", "ingest=1"))
-    )
-    cdf = spark.createDataFrame(
-        [(i, list(c)) for i, c in enumerate(centroids)], "cell long, ce array<double>"
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-    with open(os.path.join(tmp, _META_NAME), "w", encoding="utf-8") as f:
-        json.dump(dict(_ivf_meta(k), batches=1, ingests=[1], batch_ids=[]), f)
-    # the durable table replaces the in-session cache the builder returned
-    assignments.unpersist()
-    if replace:
-        shutil.rmtree(path, ignore_errors=True)
-    _publish_atomic(tmp, path, keep_if_valid=lambda p: ivf_index_exists(p, k))
+    def stage(data_dir, tmp):
+        assignments, centroids = build_ivf_index(vectors, k=k, iterations=2)
+        _write_cells(assignments, data_dir)
+        spark.createDataFrame(
+            [(i, list(c)) for i, c in enumerate(centroids)],
+            "cell long, ce array<double>",
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
+        # the durable table replaces the in-session cache the builder returned
+        assignments.unpersist()
+
+    _IVF.build(path, _ivf_meta(k), stage, replace=replace)
 
 
 def append_ivf_batch(
@@ -202,102 +140,42 @@ def append_ivf_batch(
     centroids move only on scheduled full rebuilds) and the reference's
     add_chunk-per-batch deploy story (reference lib/map_reduce/reducer.rb:
     34-42) applied to the index artifact: each day's batch lands in the
-    standing structure, paying cost proportional to the BATCH.
-
-    Mechanics: one narrow assignment scan over the batch (assign_cells —
-    no join, no shuffle), staged into a dot-prefixed temp dir (invisible
-    to partition discovery even mid-write), published by one rename as
-    the next ``ingest=<n>`` partition under the cells root, then an
-    atomic meta rewrite listing n in ``ingests`` — that rewrite IS the
-    batch's membership commit. Existing ingest partitions are never
-    touched (pinned by an mtime test); loads scan the ONE cells root with
-    an ingest-membership partition filter, so both partition levels
-    (ingest, cell) prune.
-
-    EXACTLY-ONCE under retries: appends serialize on an in-root lock
-    (concurrent appends of different batches would both claim the same
-    ingest id), dead writers' staged leftovers are reclaimed under the
-    lock, a crash BEFORE the meta rewrite leaves an unlisted orphan the
-    retry replaces — and passing a stable ``batch_id`` makes the retry
-    idempotent even when the crash landed AFTER the commit (an already-
-    committed id is a no-op, not a double-ingest)."""
+    standing structure, paying cost proportional to the BATCH — one narrow
+    assignment scan (assign_cells: no join, no shuffle). Exactly-once
+    under retries via the generation store's append; loads scan the ONE
+    cells root with an ingest-membership partition filter, so both
+    partition levels (ingest, cell) prune."""
     from map_reduce_ruby_spark.operators.ivf import assign_cells
 
-    if not _data_committed(path, "cells"):
-        raise ValueError(f"{path!r} does not hold a committed IVF index")
+    def stage(stage_dir, _meta):
+        centroids = _read_centroids(spark, path)
+        _write_cells(assign_cells(vectors.select("id", "e"), centroids), stage_dir)
 
-    with _AppendLock(path):
-        meta = _read_meta(path)  # re-read under the lock
-        done = list(meta.get("batch_ids", []))
-        if batch_id is not None and batch_id in done:
-            return  # this batch already committed: idempotent retry
-        _clean_orphan_stages(os.path.join(path, "cells"))
-
-        crows = (
-            spark.read.parquet(os.path.join(path, "centroids"))
-            .orderBy("cell")
-            .collect()
-        )
-        centroids = [list(r.ce) for r in crows]
-
-        ingests = [int(i) for i in meta.get("ingests", [1])]
-        new_id = max(ingests) + 1
-        stage = os.path.join(path, "cells", f".stage-{uuid.uuid4().hex}")
-        # clustered write — ~1 file per cell per ingest (see write_ivf_index)
-        assign_cells(vectors.select("id", "e"), centroids).repartition(
-            F.col("cell")
-        ).write.partitionBy("cell").mode("overwrite").parquet(stage)
-        _verify_meta_unchanged(path, meta)  # the assign job was the long part
-        # a pre-existing ingest=<n> dir here is OUR crashed predecessor's
-        # uncommitted orphan (ids are monotonic under the lock): replace it
-        _publish_atomic(stage, os.path.join(path, "cells", f"ingest={new_id}"))
-        # commit point for the batch's membership: atomic meta rewrite
-        new_meta = dict(
-            meta,
-            # logical ingest count, NOT len(ingests): compaction merges the
-            # physical partitions but the batch history keeps counting
-            batches=int(meta.get("batches", len(ingests))) + 1,
-            ingests=ingests + [new_id],
-            batch_ids=done + ([batch_id] if batch_id is not None else []),
-        )
-        tmp = os.path.join(path, f".{_META_NAME}.{uuid.uuid4().hex}")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-        os.replace(tmp, os.path.join(path, _META_NAME))
+    _IVF.append(path, batch_id, stage)
 
 
 def load_ivf_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, list[list[float]]]:
     """(assignments(id, e, cell), centroids) read from storage — no
-    training jobs, no corpus scan until a consumer runs. ONE scan of the
-    cells root, partition-filtered to the meta's COMMITTED ingest ids:
-    orphan partitions from a crashed append never enter the plan (the
-    filter is a partition filter, so they cost no IO either). Centroids
-    are the bounded collected artifact (k x dim doubles) every probe
-    embeds as literals, exactly as the in-session build returns them."""
-    meta = _read_meta(path)
-    if meta is None or "ingests" not in meta:
-        # a flat pre-v3 layout would otherwise die later with an opaque
-        # unresolved-'ingest'-column error deep inside the scan
-        raise ValueError(
-            f"{path!r} is not a current-layout IVF index (missing meta or "
-            "pre-per-ingest layout); rebuild with write_ivf_index"
+    training jobs, no corpus scan until a consumer runs. Centroids are the
+    bounded collected artifact (k x dim doubles) every probe embeds as
+    literals, exactly as the in-session build returns them."""
+
+    def scan(cells, _meta):
+        return (
+            cells.select("id", "e", F.col("cell").cast("long").alias("cell")),
+            _read_centroids(spark, path),
         )
-    ingests = [int(i) for i in meta["ingests"]]
-    key = ("ivf", id(spark), path, tuple(ingests), _meta_stat(path))
-    hit = _memo_get(key)
-    if hit is not None:
-        return hit
-    cells = (
-        spark.read.parquet(os.path.join(path, "cells"))
-        .filter(F.col("ingest").isin(ingests))
-        .select("id", "e", F.col("cell").cast("long").alias("cell"))
+
+    return _IVF.load(spark, path, scan)
+
+
+def _read_centroids(spark: SparkSession, path: str) -> list[list[float]]:
+    crows = (
+        spark.read.parquet(os.path.join(path, "centroids")).orderBy("cell").collect()
     )
-    crows = spark.read.parquet(os.path.join(path, "centroids")).orderBy("cell").collect()
-    centroids = [list(r.ce) for r in crows]
-    _memo_put(key, (cells, centroids))
-    return cells, centroids
+    return [list(r.ce) for r in crows]
 
 
 def _pq_meta(dim: int, n_sub: int, k: int) -> dict:
@@ -316,20 +194,9 @@ def pq_index_exists(
     """Committed AND current-version (same _META.json policy as IVF). With
     ``dim=None`` the dim field is not compared (callers that only know the
     path can still validate version/params)."""
-    if not (
-        _data_committed(path, "pq_codes")
-        and os.path.exists(os.path.join(path, "pq_books", "_SUCCESS"))
-    ):
-        return False
-    meta = _read_meta(path)
-    if meta is None:
-        return False
-    expect = _pq_meta(meta.get("dim", -1) if dim is None else dim, n_sub, k)
-    return {
-        f: v
-        for f, v in meta.items()
-        if f not in ("batches", "ingests", "batch_ids", "retired")
-    } == expect
+    if dim is None:
+        dim = (_read_meta(path) or {}).get("dim", -1)
+    return _PQ.exists(path, _pq_meta(dim, n_sub, k))
 
 
 def write_pq_index(
@@ -341,28 +208,26 @@ def write_pq_index(
     k: int = 16,
     replace: bool = False,
 ) -> None:
-    """Train the per-subspace codebooks and persist codes + codebooks (same
-    staged-build + atomic-rename publish and content-addressed keep-winner
-    semantics as write_ivf_index; ``replace=True`` for rebuilding over
-    different data at the same path — not reader-safe). The codes table is
-    the 8-bytes-per-vector artifact the ADC scan reads; the codebooks are
-    a bounded (n_sub x k x sub_dim) side table."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    codes, books = build_pq_index(vectors, dim=dim, n_sub=n_sub, k=k)
-    codes.write.mode("overwrite").parquet(os.path.join(tmp, "pq_codes", "ingest=1"))
-    rows = [
-        (m, c, list(cw)) for m, book in enumerate(books) for c, cw in enumerate(book)
-    ]
-    bdf = spark.createDataFrame(rows, "m long, code long, cw array<double>")
-    bdf.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "pq_books"))
-    with open(os.path.join(tmp, _META_NAME), "w", encoding="utf-8") as f:
-        json.dump(dict(_pq_meta(dim, n_sub, k), batches=1, ingests=[1], batch_ids=[]), f)
-    codes.unpersist()
-    if replace:
-        shutil.rmtree(path, ignore_errors=True)
-    _publish_atomic(
-        tmp, path, keep_if_valid=lambda p: pq_index_exists(p, dim, n_sub, k)
-    )
+    """Train the per-subspace codebooks and persist codes + codebooks
+    through the generation store's build (``replace=True`` as for
+    write_ivf_index). The codes table is the 8-bytes-per-vector artifact
+    the ADC scan reads; the codebooks are a bounded (n_sub x k x sub_dim)
+    side table."""
+
+    def stage(data_dir, tmp):
+        codes, books = build_pq_index(vectors, dim=dim, n_sub=n_sub, k=k)
+        codes.write.mode("overwrite").parquet(data_dir)
+        rows = [
+            (m, c, list(cw))
+            for m, book in enumerate(books)
+            for c, cw in enumerate(book)
+        ]
+        spark.createDataFrame(rows, "m long, code long, cw array<double>").coalesce(
+            1
+        ).write.mode("overwrite").parquet(os.path.join(tmp, "pq_books"))
+        codes.unpersist()
+
+    _PQ.build(path, _pq_meta(dim, n_sub, k), stage, replace=replace)
 
 
 def append_pq_batch(
@@ -373,80 +238,46 @@ def append_pq_batch(
 ) -> None:
     """Incremental PQ ingest — the append_ivf_batch model applied to the
     compressed artifact: the new batch is ENCODED against the STORED
-    codebooks (one narrow argmin projection per subspace, no training),
-    staged dot-prefixed, published by one rename as the next ``ingest=<n>``
-    partition under the codes root, and committed by the atomic meta
-    rewrite listing it. Same exactly-once machinery as append_ivf_batch:
-    serialized on the in-root lock, orphan stages reclaimed, and a stable
-    ``batch_id`` makes post-commit crash retries a no-op. Encode-with-
-    fixed-books is deterministic, so incremental codes are bit-identical
-    to a full re-encode of the same rows."""
+    codebooks (one narrow argmin projection per subspace, no training) and
+    lands as the next generation of the codes root through the generation
+    store's append. Encode-with-fixed-books is deterministic, so
+    incremental codes are bit-identical to a full re-encode of the same
+    rows."""
     from map_reduce_ruby_spark.operators.pq import encode_with_books
 
-    if not _data_committed(path, "pq_codes"):
-        raise ValueError(f"{path!r} does not hold a committed PQ index")
+    def stage(stage_dir, meta):
+        books = _read_books(spark, path)
+        encode_with_books(vectors, books, int(meta["dim"])).write.mode(
+            "overwrite"
+        ).parquet(stage_dir)
 
-    with _AppendLock(path):
-        meta = _read_meta(path)  # re-read under the lock
-        done = list(meta.get("batch_ids", []))
-        if batch_id is not None and batch_id in done:
-            return  # already committed: idempotent retry
-        _clean_orphan_stages(os.path.join(path, "pq_codes"))
-
-        _codes, books = load_pq_index(spark, path)
-        dim = int(meta["dim"])
-
-        ingests = [int(i) for i in meta.get("ingests", [1])]
-        new_id = max(ingests) + 1
-        stage = os.path.join(path, "pq_codes", f".stage-{uuid.uuid4().hex}")
-        encode_with_books(vectors, books, dim).write.mode("overwrite").parquet(stage)
-        _verify_meta_unchanged(path, meta)  # the encode job was the long part
-        _publish_atomic(stage, os.path.join(path, "pq_codes", f"ingest={new_id}"))
-        new_meta = dict(
-            meta,
-            # logical ingest count, NOT len(ingests): compaction merges the
-            # physical partitions but the batch history keeps counting
-            batches=int(meta.get("batches", len(ingests))) + 1,
-            ingests=ingests + [new_id],
-            batch_ids=done + ([batch_id] if batch_id is not None else []),
-        )
-        tmp = os.path.join(path, f".{_META_NAME}.{uuid.uuid4().hex}")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-        os.replace(tmp, os.path.join(path, _META_NAME))
+    _PQ.append(path, batch_id, stage)
 
 
 def load_pq_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, list[list[list[float]]]]:
     """(codes(id, code0..), codebooks) read from storage, shaped exactly
-    like build_pq_index's return so pq_search/ivf_pq_search accept either.
-    One scan of the codes root, partition-filtered to committed ingests
-    (orphans from a crashed append never enter the plan)."""
-    meta = _read_meta(path)
-    if meta is None or "ingests" not in meta:
-        raise ValueError(
-            f"{path!r} is not a current-layout PQ index (missing meta or "
-            "pre-per-ingest layout); rebuild with write_pq_index"
-        )
-    ingests = [int(i) for i in meta["ingests"]]
-    key = ("pq", id(spark), path, tuple(ingests), _meta_stat(path))
-    hit = _memo_get(key)
-    if hit is not None:
-        return hit
-    codes = (
-        spark.read.parquet(os.path.join(path, "pq_codes"))
-        .filter(F.col("ingest").isin(ingests))
-        .drop("ingest")
+    like build_pq_index's return so pq_search/ivf_pq_search accept either."""
+
+    return _PQ.load(
+        spark,
+        path,
+        lambda codes, _meta: (codes.drop("ingest"), _read_books(spark, path)),
     )
-    brows = spark.read.parquet(os.path.join(path, "pq_books")).orderBy("m", "code").collect()
+
+
+def _read_books(spark: SparkSession, path: str) -> list[list[list[float]]]:
+    brows = (
+        spark.read.parquet(os.path.join(path, "pq_books"))
+        .orderBy("m", "code")
+        .collect()
+    )
     n_sub = max(int(r.m) for r in brows) + 1 if brows else 0
     books: list[list[list[float]]] = [[] for _ in range(n_sub)]
     for r in brows:
         books[int(r.m)].append(list(r.cw))
-    _memo_put(key, (codes, books))
-    return codes, books
-
+    return books
 
 
 def compact_ivf_index(
@@ -466,20 +297,20 @@ def compact_ivf_index(
     back into one, sized ``target_file_bytes`` per output file (range-
     clustered on (cell, id): cells stay contiguous, oversize cells split).
 
-    Mechanics mirror the append protocol exactly: serialized on the in-root
-    lock, staged dot-prefixed (invisible to partition discovery mid-write),
-    published by ONE rename as the next ingest id, committed by the atomic
-    meta rewrite that lists only the merged generation. Readers planned
-    BEFORE the commit keep reading the old ingest dirs — compaction never
-    deletes them (that is ``vacuum_index``'s job, behind a grace window), so
-    it is safe under concurrent readers, unlike ``replace=True`` rebuilds.
-    Row multiset is unchanged and search results are bit-identical (pinned
-    by tests and by the ``knn_ivf_compacted`` catalog entry, gated on the
-    same split oracle as ``knn_ivf_incremental``: a compaction that
-    dropped, duplicated, or perturbed anything hash-mismatches).
-    Returns True when a merge happened (False: already one generation)."""
+    Mechanics are the generation store's compaction (artifact_store.
+    _compact_data_root): serialized on the in-root lock, staged dot-
+    prefixed, published by ONE rename as the next ingest id, committed by
+    the atomic meta rewrite that lists only the merged generation. Readers
+    planned BEFORE the commit keep reading the old ingest dirs — compaction
+    never deletes them (that is ``vacuum_index``'s job, behind a grace
+    window), so it is safe under concurrent readers, unlike
+    ``replace=True`` rebuilds. Row multiset is unchanged and search results
+    are bit-identical (pinned by tests and by the ``knn_ivf_compacted``
+    catalog entry, gated on the same split oracle as
+    ``knn_ivf_incremental``). Returns True when a merge happened (False:
+    already one generation)."""
     return _compact_data_root(
-        spark, path, "cells", ("cell",), target_file_bytes
+        spark, path, _IVF.data_root, ("cell",), target_file_bytes
     )
 
 
@@ -490,13 +321,10 @@ def compact_pq_index(
     the merge bounds the FILE count; codes are 8 bytes/vector so one
     generation is a handful of files). Codebooks are untouched: they are a
     bounded side table written once at train time."""
-    return _compact_data_root(spark, path, "pq_codes", (), target_file_bytes)
-
+    return _compact_data_root(spark, path, _PQ.data_root, (), target_file_bytes)
 
 
 # --- composed IVFADC artifact ------------------------------------------------
-
-IVFADC_INDEX_VERSION = 1
 
 
 def _ivfadc_meta(k: int | None, n_sub: int, pk: int) -> dict:
@@ -507,6 +335,27 @@ def _ivfadc_meta(k: int | None, n_sub: int, pk: int) -> dict:
         "n_sub": int(n_sub),
         "pk": int(pk),
     }
+
+
+def _stale_component(
+    path: str, meta: dict, ivf_path: str | None, pq_path: str | None
+) -> str | None:
+    """Why the composed table is stale w.r.t. a given component (its
+    recorded 'ingests' snapshot differs from the component's current one),
+    or None when every given component is current."""
+    comp = meta.get("components", {})
+    for root, key in ((ivf_path, "ivf_ingests"), (pq_path, "pq_ingests")):
+        if root is None:
+            continue
+        cmeta = _read_meta(root)
+        if cmeta is None or comp.get(key) != cmeta.get("ingests"):
+            return (
+                f"{path!r} is stale w.r.t. its component {root!r}: composed "
+                f"from {key}={comp.get(key)!r} but the component now holds "
+                f"ingests={None if cmeta is None else cmeta.get('ingests')!r} "
+                "— rebuild the composed table (write_ivfadc_index)"
+            )
+    return None
 
 
 def ivfadc_index_exists(
@@ -522,24 +371,9 @@ def ivfadc_index_exists(
     its meta snapshots the component generations it was built from — an
     append or compaction on either component makes the composed artifact
     a MISS (rebuild), never a silently stale serve."""
-    meta = _read_meta(path)
-    if meta is None or not _data_committed(path, "codes"):
-        return False
-    identity = {
-        f: v
-        for f, v in meta.items()
-        if f in ("format", "version", "k", "n_sub", "pk")
-    }
-    if identity != _ivfadc_meta(k, n_sub, pk):
-        return False
-    comp = meta.get("components", {})
-    for root, key in ((ivf_path, "ivf_ingests"), (pq_path, "pq_ingests")):
-        if root is None:
-            continue
-        cmeta = _read_meta(root)
-        if cmeta is None or comp.get(key) != cmeta.get("ingests"):
-            return False
-    return True
+    return _IVFADC.exists(path, _ivfadc_meta(k, n_sub, pk)) and (
+        _stale_component(path, _read_meta(path) or {}, ivf_path, pq_path) is None
+    )
 
 
 def write_ivfadc_index(
@@ -562,7 +396,7 @@ def write_ivfadc_index(
     (it re-reads every code row per session). One join at build time,
     amortized over every probe until a component generation changes
     (recorded in the meta; ivfadc_index_exists then reports a miss).
-    Same staged-atomic keep-winner publish as the sibling artifacts."""
+    Published through the generation store's build."""
     # Snapshot the component generations BEFORE building, filter the
     # scans to exactly that snapshot, and record the SAME snapshot in the
     # composed meta — recording a re-read taken after the build would let
@@ -577,36 +411,25 @@ def write_ivfadc_index(
         "ivf_ingests": ivf_meta["ingests"],
         "pq_ingests": pq_meta["ingests"],
     }
-    # bare data scans, partition-filtered to the snapshot (load_ivf_index/
-    # load_pq_index would also collect centroids/codebooks to the driver —
-    # jobs the writer has no use for)
-    cells = (
-        spark.read.parquet(os.path.join(ivf_path, "cells"))
-        .filter(F.col("ingest").isin([int(i) for i in comp["ivf_ingests"]]))
-        .select("id", F.col("cell").cast("long").alias("cell"))
-    )
-    codes = (
-        spark.read.parquet(os.path.join(pq_path, "pq_codes"))
-        .filter(F.col("ingest").isin([int(i) for i in comp["pq_ingests"]]))
-        .drop("ingest")
-    )
-    composed = cells.join(codes, "id")
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    # clustered write — ~1 file per cell (see write_ivf_index)
-    composed.repartition(F.col("cell")).write.partitionBy("cell").mode(
-        "overwrite"
-    ).parquet(os.path.join(tmp, "codes", "ingest=1"))
-    with open(os.path.join(tmp, _META_NAME), "w", encoding="utf-8") as f:
-        json.dump(
-            dict(_ivfadc_meta(k, n_sub, pk), batches=1, ingests=[1],
-                 batch_ids=[], components=comp),
-            f,
-        )
-    if replace:
-        shutil.rmtree(path, ignore_errors=True)
-    _publish_atomic(
-        tmp,
+
+    def stage(data_dir, _tmp):
+        # bare data scans, partition-filtered to the snapshot (the loaders
+        # would also collect centroids/codebooks to the driver — jobs the
+        # writer has no use for)
+        cells = _scan_ingests(
+            spark, os.path.join(ivf_path, _IVF.data_root), comp["ivf_ingests"]
+        ).select("id", F.col("cell").cast("long").alias("cell"))
+        codes = _scan_ingests(
+            spark, os.path.join(pq_path, _PQ.data_root), comp["pq_ingests"]
+        ).drop("ingest")
+        _write_cells(cells.join(codes, "id"), data_dir)
+        return {"components": comp}
+
+    _IVFADC.build(
         path,
+        _ivfadc_meta(k, n_sub, pk),
+        stage,
+        replace=replace,
         keep_if_valid=lambda p: ivfadc_index_exists(
             p, k, n_sub, pk, ivf_path=ivf_path, pq_path=pq_path
         ),
@@ -624,59 +447,28 @@ def load_ivfadc_index(
     build_ivf_pq_index's return so ivf_pq_search accepts it directly.
 
     As strict as the ``ivfadc_index_exists`` gate on identity: raises on a
-    missing artifact, a foreign format, or a different IVFADC_INDEX_VERSION
-    — a caller that skips the exists gate (or races a concurrent rebuild
-    past it) must never silently serve a stale or foreign-format table.
+    missing artifact, a foreign format, or a different IVFADC_INDEX_VERSION.
     Pass ``ivf_path``/``pq_path`` to additionally re-verify the recorded
     component 'ingests' snapshots at load time (a component append or
     compaction since the compose makes this load raise instead of serving
     a stale view)."""
-    meta = _read_meta(path)
-    if meta is None or "ingests" not in meta:
-        raise ValueError(f"{path!r} is not a current-layout IVFADC index")
-    if (
-        meta.get("format") != "ivfadc_index"
-        or meta.get("version") != IVFADC_INDEX_VERSION
-    ):
-        raise ValueError(
-            f"{path!r} does not hold a current-version IVFADC index "
-            f"(found format={meta.get('format')!r} "
-            f"version={meta.get('version')!r}, "
-            f"want ivfadc_index v{IVFADC_INDEX_VERSION})"
+
+    def scan(codes, meta):
+        # runs on every attach miss; the key below carries the component
+        # meta stats, so a component that moves after a good attach rotates
+        # the key and lands here again — a stale view is never served
+        stale = _stale_component(path, meta, ivf_path, pq_path)
+        if stale is not None:
+            raise ValueError(stale)
+        code_cols = [c for c in codes.columns if c.startswith("code")]
+        return codes.select(
+            "id", F.col("cell").cast("long").alias("cell"), *code_cols
         )
-    comp = meta.get("components", {})
-    for root, key in ((ivf_path, "ivf_ingests"), (pq_path, "pq_ingests")):
-        if root is None:
-            continue
-        cmeta = _read_meta(root)
-        if cmeta is None or comp.get(key) != cmeta.get("ingests"):
-            raise ValueError(
-                f"{path!r} is stale w.r.t. its component {root!r}: composed "
-                f"from {key}={comp.get(key)!r} but the component now holds "
-                f"ingests={None if cmeta is None else cmeta.get('ingests')!r} "
-                "— rebuild the composed table (write_ivfadc_index)"
-            )
-    ingests = [int(i) for i in meta["ingests"]]
-    # memo key carries the COMPONENT meta stats too: a component append/
-    # compact after this load must re-raise the staleness error above on
-    # the next call, never serve the memoized composed scan
-    key = (
-        "ivfadc",
-        id(spark),
+
+    return _IVFADC.load(
+        spark,
         path,
-        tuple(ingests),
-        _meta_stat(path),
-        None if ivf_path is None else _meta_stat(ivf_path),
-        None if pq_path is None else _meta_stat(pq_path),
+        scan,
+        identity={"format": "ivfadc_index", "version": IVFADC_INDEX_VERSION},
+        key=tuple(None if p is None else _meta_stat(p) for p in (ivf_path, pq_path)),
     )
-    hit = _memo_get(key)
-    if hit is not None:
-        return hit
-    scan = spark.read.parquet(os.path.join(path, "codes"))
-    code_cols = [c for c in scan.columns if c.startswith("code")]
-    out = (
-        scan.filter(F.col("ingest").isin(ingests))
-        .select("id", F.col("cell").cast("long").alias("cell"), *code_cols)
-    )
-    _memo_put(key, out)
-    return out

@@ -1,30 +1,41 @@
-"""Shared durable-artifact store protocol: the commit machinery every
-trained artifact in the engine publishes through.
+"""The generation store: the one persistence protocol every trained
+artifact in the engine publishes through.
 
-Four stores persist trained artifacts — ANN indexes (operators/
-ann_index.py), the MinHash band index (operators/dedup_index.py), the
-BM25 inverted index (operators/text_index.py), and the BPE tokenizer
-(operators/tokenizer_store.py). They share ONE protocol, defined here:
+Six artifacts are described as ``GenerationStore`` values and run the
+protocol written once below — IVF, PQ and the composed IVFADC table
+(operators/ann_index.py), the Naive Bayes model (operators/nb_store.py),
+the BM25 inverted index (operators/text_index.py) and the BPE tokenizer
+(operators/tokenizer_store.py). Each store module keeps only what is
+specific to it: what to train or featurize, the stage writer, the meta
+delta and the side-table reader. The protocol:
 
-- versioned ``_META.json`` identity + committed-ingest membership
-  (``_read_meta`` / ``read_index_meta`` / ``_data_committed``);
-- staged-build + ONE-rename publish with content-addressed keep-winner
-  semantics (``_publish_atomic``) — readers can never observe a torn
-  artifact, and concurrent builders never delete a live one;
-- single-writer maintenance sections (``_AppendLock``: O_EXCL lock file,
-  heartbeat against false staleness, dead-writer lock breaking) with
-  orphan-stage reclamation (``_clean_orphan_stages``) and a CAS re-check
-  before irreversible commits (``_verify_meta_unchanged``);
-- the OPTIMIZE/VACUUM pair for per-ingest layouts (``_compact_data_root``
-  merges committed generations into one, ``vacuum_index`` reclaims
-  unlisted bytes behind a reader-drain grace window).
+- **build:** stage the whole artifact under a sibling temp root, write its
+  ``_META.json`` (build identity + what the data determines + committed
+  ingest membership), publish by ONE rename with content-addressed
+  keep-winner semantics (``_publish_atomic``) — readers never observe a
+  torn artifact, and concurrent builders never delete a live one;
+- **exists:** every committed ingest and side root has its ``_SUCCESS``
+  marker, and the meta's identity fields match;
+- **append:** under the single-writer lock (``_AppendLock``: O_EXCL lock
+  file, heartbeat against false staleness, dead-writer lock breaking),
+  re-read the meta, return early on an already-committed ``batch_id``,
+  reclaim orphan stages, stage the batch as the next ``ingest=<n>``,
+  re-check the meta (CAS, ``_verify_meta_unchanged``), publish, and commit
+  through ``_write_meta_atomic`` with the batch's counters added;
+- **compact / vacuum:** the OPTIMIZE/VACUUM pair for per-ingest layouts
+  (``_compact_data_root`` merges committed generations into one,
+  ``vacuum_index`` reclaims unlisted bytes behind a reader-drain grace
+  window);
+- **load:** one scan of the data root partition-filtered to the committed
+  ingests, through one session-safe attach memo (``_ATTACH``).
 
-Historically this lived inside ann_index.py and the sibling stores
-imported it from there; it is store-neutral, so it now lives in this
-neutral module (ann_index re-exports the names for compatibility). The
-protocol is the engine's analog of the reference's persist-between-phases
-deploy story (/root/reference/README.md:60-84, reducer.rb:34-42
-add_chunk ingest), hardened for concurrent writers and crash-retry.
+The MinHash band index (operators/dedup_index.py) keeps its own layout —
+its generations are bucketed catalog tables switched by table location,
+not ``ingest=<n>`` directories — and shares only ``_AppendLock`` and
+``_publish_atomic``. The protocol is the engine's analog of the
+reference's persist-between-phases deploy story (reference README.md:
+60-84, reducer.rb:34-42 add_chunk ingest), hardened for concurrent
+writers and crash-retry.
 """
 
 from __future__ import annotations
@@ -33,9 +44,14 @@ import json
 import os
 import shutil
 import uuid
+import weakref
+from dataclasses import dataclass
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from map_reduce_ruby_spark.plans.memo import LruMemo
 
 _META_NAME = "_META.json"
 _APPEND_LOCK = ".append.lock"
@@ -214,20 +230,237 @@ def read_index_meta(path: str) -> dict | None:
     return _read_meta(path)
 
 
-def _data_committed(path: str, data_root_name: str) -> bool:
-    """Every ingest partition the meta lists as committed is present with
-    its parquet _SUCCESS marker. Compaction renumbers the committed list
-    (ingest=1 need not exist on a compacted index), so membership comes
-    from the meta, never a hard-coded first id."""
-    meta = _read_meta(path)
-    if meta is None or not meta.get("ingests"):
-        return False
-    return all(
-        os.path.exists(
-            os.path.join(path, data_root_name, f"ingest={int(i)}", "_SUCCESS")
-        )
-        for i in meta["ingests"]
+def _scan_ingests(spark: SparkSession, root: str, ingests) -> DataFrame:
+    """ONE scan of a per-ingest data root, partition-filtered to the
+    committed ``ingests``: orphan generations from a crashed append never
+    enter the plan, and the filter is a partition filter, so they cost no
+    IO either."""
+    return spark.read.parquet(root).filter(
+        F.col("ingest").isin([int(i) for i in ingests])
     )
+
+
+def _meta_stat(path: str):
+    try:
+        st = os.stat(os.path.join(path, _META_NAME))
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    except OSError:
+        return None
+
+
+def _add(old, delta):
+    """Additive meta counters: integers add, per-key dicts add per key."""
+    if isinstance(delta, dict):
+        out = dict(old or {})
+        for k, n in delta.items():
+            out[k] = int(out.get(k, 0)) + n
+        return out
+    return int(old or 0) + delta
+
+
+# The one attach memo. What it saves is DRIVER time, not compute: every
+# load re-lists the data root (up to |ingests| x |cells| small files for
+# IVF — partition discovery is single-threaded driver work), re-reads
+# parquet footers for schema, and re-collects side tables (centroids,
+# codebooks). Reusing the DataFrame reuses its InMemoryFileIndex, so a warm
+# attach pays none of it. The key is a WEAK reference to the session (an
+# entry stored for one session object is a miss for any replacement, even
+# one that reuses a dead session's id, and the key never keeps a dropped
+# session alive), the path, and the committed meta's ingests and file
+# stat: every append/compact/vacuum/rebuild rewrites _META.json by rename,
+# so the key rotates and a stale attach is never served; vacuum only
+# deletes retired or never-listed generations, which the entry for the
+# current meta never scans.
+_ATTACH = LruMemo(capacity=16)
+
+
+@dataclass(frozen=True)
+class GenerationStore:
+    """One persisted artifact kind on the generation protocol.
+
+    ``data_root`` holds the per-ingest generations (``ingest=<n>``
+    partitions, membership listed by the meta's ``ingests``); ``side_roots``
+    are write-once tables trained with the first build (centroids,
+    codebooks, merges, vocab). A store without a data root (the BPE
+    tokenizer) is write-once/reload-many: build, exists and load only.
+
+    The build identity (format, version, params) is the dict a caller
+    passes to ``build``/``exists``/``load``. Beside it the meta carries the
+    fields the data determines, returned by the stage writers: additive
+    counters each append adds its batch's delta to (BM25 ``n_docs``/
+    ``total_len``, NB ``class_docs``), or the composed IVFADC table's
+    component snapshot."""
+
+    kind: str  # "IVF index" — names the artifact in errors
+    builder: str  # the public writer a load error points at
+    data_root: str | None
+    side_roots: tuple[str, ...] = ()
+
+    def _committed(self, path: str, meta: dict) -> bool:
+        """Every ingest the meta lists is present with its parquet _SUCCESS
+        marker. Compaction renumbers the committed list (ingest=1 need not
+        exist on a compacted root), so membership comes from the meta,
+        never a hard-coded first id."""
+        if self.data_root is None:
+            return True
+        ingests = meta.get("ingests")
+        return bool(ingests) and all(
+            os.path.exists(
+                os.path.join(path, self.data_root, f"ingest={int(i)}", "_SUCCESS")
+            )
+            for i in ingests
+        )
+
+    def exists(self, path: str, identity: dict) -> bool:
+        """Fully committed (every committed ingest and side root has its
+        _SUCCESS) AND built by the current builder with the same params
+        (identity fields match) — a content-keyed cache hit on an artifact
+        built by older code or other params is a miss, never a silent
+        stale load."""
+        meta = _read_meta(path)
+        if meta is None or any(meta.get(f) != v for f, v in identity.items()):
+            return False
+        return self._committed(path, meta) and all(
+            os.path.exists(os.path.join(path, r, "_SUCCESS"))
+            for r in self.side_roots
+        )
+
+    def build(
+        self,
+        path: str,
+        identity: dict,
+        stage: Callable[[str | None, str], dict | None],
+        replace: bool = False,
+        keep_if_valid: Callable[[str], bool] | None = None,
+    ) -> None:
+        """Stage the whole artifact under a sibling temp root and publish it
+        by ONE rename. ``stage(data_dir, tmp)`` writes the first generation
+        into ``data_dir`` (None without a data root) and the side roots
+        under ``tmp``, and returns the meta fields the data determines.
+
+        At a content-addressed path (the default) a path is bound to its
+        inputs: builders are deterministic, so a VALID existing artifact
+        already holds these bytes and is kept — a concurrent loser never
+        deletes a live artifact under readers. ``replace=True`` removes
+        the old artifact first (rebuilding over different data at the same
+        path; not reader-safe)."""
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+        data_dir = (
+            None
+            if self.data_root is None
+            else os.path.join(tmp, self.data_root, "ingest=1")
+        )
+        meta = dict(identity, **(stage(data_dir, tmp) or {}))
+        if self.data_root is not None:
+            meta.update(batches=1, ingests=[1], batch_ids=[])
+        os.makedirs(tmp, exist_ok=True)
+        with open(os.path.join(tmp, _META_NAME), "w", encoding="utf-8") as f:
+            json.dump(meta, f)
+        if replace:
+            shutil.rmtree(path, ignore_errors=True)
+        _publish_atomic(
+            tmp, path, keep_if_valid or (lambda p: self.exists(p, identity))
+        )
+
+    def append(
+        self,
+        path: str,
+        batch_id: str | None,
+        stage: Callable[[str, dict], dict | None],
+    ) -> None:
+        """Exactly-once ingest of one batch as the next generation.
+        ``stage(stage_dir, meta)`` writes the batch's rows into the
+        dot-prefixed ``stage_dir`` (invisible to partition discovery even
+        mid-write) and returns the batch's counter deltas; existing
+        generations are never touched.
+
+        Appends serialize on the in-root lock (concurrent appends of
+        different batches would both claim the same ingest id); dead
+        writers' staged leftovers are reclaimed under it; a crash before
+        the meta commit leaves an unlisted orphan the retry replaces; and a
+        stable ``batch_id`` makes the retry a no-op even when the crash
+        landed AFTER the commit (an already-committed id is skipped, not
+        ingested twice)."""
+        meta = _read_meta(path)
+        if meta is None or not self._committed(path, meta):
+            raise ValueError(f"{path!r} does not hold a committed {self.kind}")
+        root = os.path.join(path, self.data_root)
+        with _AppendLock(path):
+            meta = _read_meta(path)  # re-read under the lock
+            done = list(meta.get("batch_ids", []))
+            if batch_id is not None and batch_id in done:
+                return  # already committed: idempotent retry
+            _clean_orphan_stages(root)
+            ingests = [int(i) for i in meta["ingests"]]
+            new_id = max(ingests) + 1
+            stage_dir = os.path.join(root, f".stage-{uuid.uuid4().hex}")
+            delta = stage(stage_dir, meta) or {}
+            _verify_meta_unchanged(path, meta)  # staging was the long part
+            # a pre-existing ingest=<new_id> dir is a crashed predecessor's
+            # uncommitted orphan (ids are monotonic under the lock): replace it
+            _publish_atomic(stage_dir, os.path.join(root, f"ingest={new_id}"))
+            # commit point for the batch's membership: atomic meta rewrite
+            _write_meta_atomic(
+                path,
+                dict(
+                    meta,
+                    **{f: _add(meta.get(f), d) for f, d in delta.items()},
+                    # logical ingest count, NOT len(ingests): compaction
+                    # merges the physical partitions but the history counts
+                    batches=int(meta.get("batches", len(ingests))) + 1,
+                    ingests=ingests + [new_id],
+                    batch_ids=done + ([batch_id] if batch_id is not None else []),
+                ),
+            )
+
+    def load(
+        self,
+        spark: SparkSession,
+        path: str,
+        scan: Callable[[DataFrame | None, dict], Any],
+        identity: dict | None = None,
+        key: tuple = (),
+    ) -> Any:
+        """Attach a committed artifact: no training jobs, no corpus scan
+        until a consumer runs. Returns ``scan(data, meta)``, where ``data``
+        is ONE scan of the data root partition-filtered to the committed
+        ingests (None without a data root). Raises on a missing or
+        pre-per-ingest meta, and — when ``identity`` is given — on one
+        whose identity fields differ, so a caller that skips the exists
+        gate (or races a concurrent rebuild past it) never silently serves
+        a stale or foreign artifact. Attaches go through ``_ATTACH``;
+        ``key`` adds further stats the attach depends on."""
+        stat = _meta_stat(path)  # before the read: a key never outdates its content
+        meta = _read_meta(path)
+        if meta is None or (self.data_root is not None and "ingests" not in meta):
+            # a flat pre-per-ingest layout would otherwise die later with an
+            # opaque unresolved-'ingest'-column error deep inside the scan
+            raise ValueError(
+                f"{path!r} is not a current-layout {self.kind} (missing meta "
+                f"or pre-per-ingest layout); rebuild with {self.builder}"
+            )
+        if identity is not None and any(
+            meta.get(f) != v for f, v in identity.items()
+        ):
+            raise ValueError(
+                f"{path!r} does not hold a current-version {self.kind} "
+                f"(found meta {meta!r}, want {identity!r})"
+            )
+        ingests = tuple(int(i) for i in meta.get("ingests", ()))
+
+        def attach():
+            data = (
+                None
+                if self.data_root is None
+                else _scan_ingests(
+                    spark, os.path.join(path, self.data_root), ingests
+                )
+            )
+            return scan(data, meta)
+
+        return _ATTACH.get_or_build(
+            (weakref.ref(spark), self.kind, path, ingests, stat, *key), attach
+        )
 
 
 def _compact_data_root(
@@ -255,11 +488,7 @@ def _compact_data_root(
 
         # One scan of the committed ingests (partition-filtered, orphans
         # never enter the plan), rewritten as ONE new ingest partition.
-        merged = (
-            spark.read.parquet(root)
-            .filter(F.col("ingest").isin(ingests))
-            .drop("ingest")
-        )
+        merged = _scan_ingests(spark, root, ingests).drop("ingest")
         new_id = max(ingests) + 1
         stage = os.path.join(root, f".stage-{uuid.uuid4().hex}")
         # Size the output by BYTES, not by task count (the Delta/Iceberg

@@ -17,9 +17,10 @@ stronger than IVF (whose centroids legitimately freeze at batch-1). The
 build(A)+append(B) must classify a probe slice identically to the DuckDB
 oracle's from-scratch train over A ∪ B.
 
-Layout (one model root; the shared artifact-store protocol — O_EXCL+
-heartbeat maintenance lock, dot-prefixed staging, one-rename publish,
-atomic meta commit, orphan-stage reclamation, retired-stamped vacuum):
+The model is a ``GenerationStore`` (operators/artifact_store.py): build,
+exists, append, compact and load are the one protocol written there; this
+module holds the featurizer, the stage writer, the class_docs meta delta
+and the counts reader. Layout:
 
     <root>/counts/ingest=<n>/*.parquet   (cls, b, c_cb)
     <root>/_META.json   {format, version, n_buckets, class_docs, ingests,
@@ -33,26 +34,17 @@ training corpus, only the counts (broadcast) and the probe batch.
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce_ruby_spark.operators.artifact_store import (
-    _META_NAME,
-    _AppendLock,
-    _clean_orphan_stages,
+    GenerationStore,
     _compact_data_root,
-    _data_committed,
-    _publish_atomic,
-    _read_meta,
-    _verify_meta_unchanged,
-    _write_meta_atomic,
 )
 
 NB_MODEL_VERSION = 1
+
+_NB = GenerationStore("NB model", "write_nb_model", "counts")
 
 
 def _nb_meta(n_buckets: int) -> dict:
@@ -63,79 +55,50 @@ def _nb_meta(n_buckets: int) -> dict:
     }
 
 
-def _counts_from_db(db: DataFrame) -> DataFrame:
-    """(cls, b, c_cb) class-bucket gram counts from a (doc_id, lang, b,
-    cnt) feature frame — the additive row half of the model's sufficient
-    statistics."""
-    return db.groupBy(F.col("lang").alias("cls"), "b").agg(
-        F.sum("cnt").alias("c_cb")
-    )
+def _stage_counts(docs: DataFrame, dst: str) -> dict:
+    """Write ``docs``' (cls, b, c_cb) class-bucket gram counts — the
+    additive row half of the model's sufficient statistics — to ``dst``,
+    and return the additive meta-counter half: ``class_docs`` {cls:
+    n_docs}, bounded by |classes|. Counting FROM the feature frame matches
+    the in-query trainer and its oracle (a zero-token doc is invisible to
+    either). ONE featurize pass feeds both halves (cached, not recomputed
+    per derivation — the batch scan is the whole cost here)."""
+    from map_reduce_ruby_spark.plans.dsir_queries import gram_buckets_for
 
-
-def _class_docs_from_db(db: DataFrame) -> dict[str, int]:
-    """{cls: n_docs} from the feature frame — the additive meta-counter
-    half (the prior's sufficient statistics), bounded by |classes|.
-    Counting FROM the feature frame matches the in-query trainer and its
-    oracle (a zero-token doc is invisible to either)."""
-    return {
-        r.cls: int(r.n)
-        for r in db.select("doc_id", F.col("lang").alias("cls"))
-        .distinct()
-        .groupBy("cls")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    db = gram_buckets_for(docs).cache()
+    try:
+        class_docs = {
+            r.cls: int(r.n)
+            for r in db.select("doc_id", F.col("lang").alias("cls"))
+            .distinct()
+            .groupBy("cls")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        db.groupBy(F.col("lang").alias("cls"), "b").agg(
+            F.sum("cnt").alias("c_cb")
+        ).coalesce(1).write.mode("overwrite").parquet(dst)
+    finally:
+        db.unpersist()
+    return {"class_docs": class_docs}
 
 
 def nb_model_exists(path: str, n_buckets: int) -> bool:
     """Committed (every meta-listed ingest has its _SUCCESS) AND built by
-    the current builder with the same bucket count — the stale-cache
-    policy shared with bm25_index_exists/ivf_index_exists."""
-    meta = _read_meta(path)
-    return (
-        _data_committed(path, "counts")
-        and meta is not None
-        and {
-            f: v
-            for f, v in meta.items()
-            if f
-            not in ("batches", "ingests", "batch_ids", "retired", "class_docs")
-        }
-        == _nb_meta(n_buckets)
-    )
+    the current builder with the same bucket count — the generation
+    store's exists gate."""
+    return _NB.exists(path, _nb_meta(n_buckets))
 
 
 def write_nb_model(
     spark: SparkSession, docs: DataFrame, path: str, n_buckets: int
 ) -> None:
     """Build and persist the model for labeled ``docs`` (doc_id, lang,
-    text): counts staged under a temp root, published by ONE rename with
-    content-addressed keep-winner semantics (a concurrent builder's loser
-    never deletes a live model out from under the winner's readers)."""
-    from map_reduce_ruby_spark.plans.dsir_queries import gram_buckets_for
-
-    # ONE featurize pass feeds both statistic halves (cached, not
-    # recomputed per derivation — the batch scan is the whole cost here)
-    db = gram_buckets_for(docs).cache()
-    try:
-        class_docs = _class_docs_from_db(db)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        _counts_from_db(db).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "counts", "ingest=1")
-        )
-    finally:
-        db.unpersist()
-    meta = dict(
-        _nb_meta(n_buckets),
-        class_docs=class_docs,
-        batches=1,
-        ingests=[1],
-        batch_ids=[],
-    )
-    with open(os.path.join(tmp, _META_NAME), "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-    _publish_atomic(
-        tmp, path, keep_if_valid=lambda p: nb_model_exists(p, n_buckets)
+    text) through the generation store's build: staged, published by ONE
+    rename, a valid existing model at the content-addressed path kept as
+    the winner."""
+    _NB.build(
+        path, _nb_meta(n_buckets), lambda data_dir, _tmp: _stage_counts(docs, data_dir)
     )
 
 
@@ -149,45 +112,10 @@ def append_nb_batch(
     the next ``ingest=<n>`` partition and the meta commit ADDS the
     batch's per-class document counts — every statistic commutes, so the
     maintained model EQUALS a full retrain (gated by text_nb_persisted).
-    Same exactly-once machinery as append_bm25_batch: serialized+
-    heartbeated lock, orphan-stage reclamation, CAS before publish,
-    batch_id idempotency tokens."""
-    if not _data_committed(path, "counts"):
-        raise ValueError(f"{path!r} does not hold a committed NB model")
-
-    with _AppendLock(path):
-        meta = _read_meta(path)
-        done = list(meta.get("batch_ids", []))
-        if batch_id is not None and batch_id in done:
-            return  # already committed: idempotent retry
-        _clean_orphan_stages(os.path.join(path, "counts"))
-
-        ingests = [int(i) for i in meta["ingests"]]
-        new_id = max(ingests) + 1
-        from map_reduce_ruby_spark.plans.dsir_queries import gram_buckets_for
-
-        db = gram_buckets_for(docs).cache()  # one featurize pass, two stats
-        try:
-            batch_docs = _class_docs_from_db(db)
-            stage = os.path.join(path, "counts", f".stage-{uuid.uuid4().hex}")
-            _counts_from_db(db).coalesce(1).write.mode("overwrite").parquet(stage)
-        finally:
-            db.unpersist()
-        _verify_meta_unchanged(path, meta)  # the count job was the long part
-        _publish_atomic(stage, os.path.join(path, "counts", f"ingest={new_id}"))
-        merged = dict(meta.get("class_docs", {}))
-        for cls, n in batch_docs.items():
-            merged[cls] = int(merged.get(cls, 0)) + n
-        _write_meta_atomic(
-            path,
-            dict(
-                meta,
-                class_docs=merged,
-                batches=int(meta.get("batches", len(ingests))) + 1,
-                ingests=ingests + [new_id],
-                batch_ids=done + ([batch_id] if batch_id is not None else []),
-            ),
-        )
+    Exactly-once through the generation store's append."""
+    _NB.append(
+        path, batch_id, lambda stage_dir, _meta: _stage_counts(docs, stage_dir)
+    )
 
 
 def compact_nb_model(spark: SparkSession, path: str) -> bool:
@@ -197,7 +125,7 @@ def compact_nb_model(spark: SparkSession, path: str) -> bool:
     — the loader SUMS them — so the merge is a plain row union; the
     additive class_docs meta survives untouched."""
     return _compact_data_root(
-        spark, path, "counts", (), range_cols=("cls", "b")
+        spark, path, _NB.data_root, (), range_cols=("cls", "b")
     )
 
 
@@ -205,24 +133,18 @@ def load_nb_model(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, dict]:
     """(counts (cls, b, c_cb) summed across committed ingests, class_docs
-    (cls, nd_c), meta). Orphan stages never enter the plan (partition
-    filter on ingest); generations merge by summation, which is exactly
+    (cls, nd_c), meta). Generations merge by summation, which is exactly
     why append never rewrites them."""
-    meta = _read_meta(path)
-    if meta is None or "ingests" not in meta:
-        raise ValueError(
-            f"{path!r} is not a current-layout NB model; rebuild with "
-            "write_nb_model"
+
+    def scan(counts, meta):
+        class_docs = spark.createDataFrame(
+            [(cls, int(n)) for cls, n in sorted(meta["class_docs"].items())],
+            "cls string, nd_c long",
         )
-    ingests = [int(i) for i in meta["ingests"]]
-    counts = (
-        spark.read.parquet(os.path.join(path, "counts"))
-        .filter(F.col("ingest").isin(ingests))
-        .groupBy("cls", "b")
-        .agg(F.sum("c_cb").alias("c_cb"))
-    )
-    class_docs = spark.createDataFrame(
-        [(cls, int(n)) for cls, n in sorted(meta["class_docs"].items())],
-        "cls string, nd_c long",
-    )
-    return counts, class_docs, meta
+        return (
+            counts.groupBy("cls", "b").agg(F.sum("c_cb").alias("c_cb")),
+            class_docs,
+            meta,
+        )
+
+    return _NB.load(spark, path, scan)

@@ -8,10 +8,10 @@ lists in-query, THIS is the stored form a production corpus maintains —
 build once, append each day's documents, compact on schedule, and answer
 queries by reading ONLY the query terms' slice of the index.
 
-Layout (one index root; the same protocol machinery as the ANN indexes —
-O_EXCL+heartbeat maintenance lock, dot-prefixed staging, one-rename
-publish, atomic meta commit, CAS against broken-lock stale writers,
-retired-stamped vacuum):
+The index is a ``GenerationStore`` (operators/artifact_store.py): build,
+exists, append, compact and load are the one protocol written there; this
+module holds the posting builder, the stage writer, the N/total_len meta
+delta and the search. Layout:
 
     <root>/postings/ingest=<n>/tb=<b>/*.parquet   (term, doc_id, tf, dlen)
     <root>/_META.json   {n_docs, total_len, n_buckets, ingests, ...}
@@ -47,26 +47,18 @@ hash-mismatch.
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce_ruby_spark.operators.artifact_store import (
-    _META_NAME,
-    _AppendLock,
-    _clean_orphan_stages,
+    GenerationStore,
     _compact_data_root,
-    _data_committed,
-    _publish_atomic,
-    _read_meta,
-    _verify_meta_unchanged,
 )
 
 BM25_INDEX_VERSION = 1
 _N_BUCKETS = 64
+
+_BM25 = GenerationStore("BM25 index", "write_bm25_index", "postings")
 
 
 def _bm25_meta(n_buckets: int) -> dict:
@@ -109,36 +101,25 @@ def _batch_stats(docs: DataFrame) -> tuple[int, int]:
     return int(row.n), int(row.t)
 
 
+def _stage_postings(docs: DataFrame, n_buckets: int, dst: str) -> dict:
+    """Write ``docs``' postings to ``dst`` (directory-partitioned by term
+    bucket) and return the batch's additive stats as meta counters."""
+    n_docs, total_len = _batch_stats(docs)
+    (
+        _postings_for_docs(docs, n_buckets)
+        .repartition("tb")
+        .write.partitionBy("tb")
+        .mode("overwrite")
+        .parquet(dst)
+    )
+    return {"n_docs": n_docs, "total_len": total_len}
+
+
 def bm25_index_exists(path: str, n_buckets: int = _N_BUCKETS) -> bool:
     """Committed (every meta-listed ingest has its _SUCCESS) AND built by
-    the current builder with the same bucket count — same stale-cache
-    policy as ivf_index_exists."""
-    meta = _read_meta(path)
-    return (
-        _data_committed(path, "postings")
-        and meta is not None
-        and {
-            f: v
-            for f, v in meta.items()
-            if f
-            not in (
-                "batches",
-                "ingests",
-                "batch_ids",
-                "retired",
-                "n_docs",
-                "total_len",
-            )
-        }
-        == _bm25_meta(n_buckets)
-    )
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, f".{_META_NAME}.{uuid.uuid4().hex}")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _META_NAME))
+    the current builder with the same bucket count — the generation
+    store's exists gate."""
+    return _BM25.exists(path, _bm25_meta(n_buckets))
 
 
 def write_bm25_index(
@@ -148,36 +129,18 @@ def write_bm25_index(
     n_buckets: int = _N_BUCKETS,
     replace: bool = False,
 ) -> None:
-    """Build and persist the inverted index for ``docs`` (doc_id, text):
-    postings staged under a temp root, published by ONE rename (same
-    content-addressed keep-winner semantics as write_ivf_index —
-    ``replace=True`` to rebuild over different data at the same path, not
-    reader-safe). The meta carries the additive global stats the appends
-    will maintain."""
-    import shutil
-
-    n_docs, total_len = _batch_stats(docs)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    (
-        _postings_for_docs(docs, n_buckets)
-        .repartition("tb")
-        .write.partitionBy("tb")
-        .mode("overwrite")
-        .parquet(os.path.join(tmp, "postings", "ingest=1"))
-    )
-    meta = dict(
+    """Build and persist the inverted index for ``docs`` (doc_id, text)
+    through the generation store's build: staged, published by ONE
+    rename, a valid existing index at the content-addressed path kept as
+    the winner (``replace=True`` to rebuild over different data at the
+    same path, not reader-safe). The meta carries the additive global
+    stats the appends will maintain."""
+    _BM25.build(
+        path,
         _bm25_meta(n_buckets),
-        n_docs=n_docs,
-        total_len=total_len,
-        batches=1,
-        ingests=[1],
-        batch_ids=[],
+        lambda data_dir, _tmp: _stage_postings(docs, n_buckets, data_dir),
+        replace=replace,
     )
-    with open(os.path.join(tmp, _META_NAME), "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-    if replace:
-        shutil.rmtree(path, ignore_errors=True)
-    _publish_atomic(tmp, path, keep_if_valid=lambda p: bm25_index_exists(p, n_buckets))
 
 
 def append_bm25_batch(
@@ -190,44 +153,15 @@ def append_bm25_batch(
     ``ingest=<n>`` partition and the meta commit ADDS the batch's doc and
     token counts into the global counters — integer adds commute, so the
     incrementally-maintained stats equal a full rebuild's exactly (gated
-    by the text_bm25_persisted oracle). Same exactly-once machinery as
-    append_ivf_batch: serialized+heartbeated lock, orphan-stage
-    reclamation, CAS before publish, batch_id idempotency tokens."""
-    if not _data_committed(path, "postings"):
-        raise ValueError(f"{path!r} does not hold a committed BM25 index")
-
-    with _AppendLock(path):
-        meta = _read_meta(path)
-        done = list(meta.get("batch_ids", []))
-        if batch_id is not None and batch_id in done:
-            return  # already committed: idempotent retry
-        _clean_orphan_stages(os.path.join(path, "postings"))
-
-        n_buckets = int(meta["n_buckets"])
-        ingests = [int(i) for i in meta["ingests"]]
-        new_id = max(ingests) + 1
-        n_docs, total_len = _batch_stats(docs)
-        stage = os.path.join(path, "postings", f".stage-{uuid.uuid4().hex}")
-        (
-            _postings_for_docs(docs, n_buckets)
-            .repartition("tb")
-            .write.partitionBy("tb")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        _verify_meta_unchanged(path, meta)  # the posting build was the long part
-        _publish_atomic(stage, os.path.join(path, "postings", f"ingest={new_id}"))
-        _write_meta(
-            path,
-            dict(
-                meta,
-                n_docs=int(meta["n_docs"]) + n_docs,
-                total_len=int(meta["total_len"]) + total_len,
-                batches=int(meta.get("batches", len(ingests))) + 1,
-                ingests=ingests + [new_id],
-                batch_ids=done + ([batch_id] if batch_id is not None else []),
-            ),
-        )
+    by the text_bm25_persisted oracle). Exactly-once through the
+    generation store's append."""
+    _BM25.append(
+        path,
+        batch_id,
+        lambda stage_dir, meta: _stage_postings(
+            docs, int(meta["n_buckets"]), stage_dir
+        ),
+    )
 
 
 def compact_bm25_index(
@@ -243,7 +177,7 @@ def compact_bm25_index(
     return _compact_data_root(
         spark,
         path,
-        "postings",
+        _BM25.data_root,
         ("tb",),
         target_file_bytes,
         range_cols=("term", "doc_id"),
@@ -251,19 +185,8 @@ def compact_bm25_index(
 
 
 def load_bm25_postings(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
-    """(postings DataFrame filtered to committed ingests, meta). One scan
-    root; orphans never enter the plan (partition filter on ingest)."""
-    meta = _read_meta(path)
-    if meta is None or "ingests" not in meta:
-        raise ValueError(
-            f"{path!r} is not a current-layout BM25 index; rebuild with "
-            "write_bm25_index"
-        )
-    ingests = [int(i) for i in meta["ingests"]]
-    postings = spark.read.parquet(os.path.join(path, "postings")).filter(
-        F.col("ingest").isin(ingests)
-    )
-    return postings, meta
+    """(postings DataFrame filtered to committed ingests, meta)."""
+    return _BM25.load(spark, path, lambda postings, meta: (postings, meta))
 
 
 def bm25_search(

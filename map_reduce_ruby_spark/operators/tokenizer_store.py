@@ -14,11 +14,11 @@ Unlike the ANN/BM25 indexes there is NO append path: BPE merges are a
 global frequency argmax, so adding documents is a retrain by definition
 (the industry practice too — tokenizers are versioned artifacts, frozen
 per model generation, not incrementally maintained). The artifact is
-therefore write-once/reload-many with the same staged-build + one-rename
-publish and content-addressed keep-winner semantics as the sibling
-stores, and a version/params gate in _META.json so an artifact trained by
-older code or different step counts is a cache MISS, never a silent
-stale load.
+therefore a ``GenerationStore`` without a data root (operators/
+artifact_store.py): write-once/reload-many through the same build, exists
+and load as the sibling stores, with a version/params gate in _META.json
+so an artifact trained by older code or different step counts is a cache
+MISS, never a silent stale load.
 
 Layout:
 
@@ -34,20 +34,20 @@ text_bpe_encode's plan.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from map_reduce_ruby_spark.operators.artifact_store import (
-    _META_NAME,
-    _publish_atomic,
+    GenerationStore,
     _read_meta,
 )
 
 BPE_TOKENIZER_VERSION = 1
+
+_BPE = GenerationStore(
+    "BPE tokenizer", "write_bpe_tokenizer", None, ("merges", "vocab")
+)
 
 
 def _tok_meta(steps: int) -> dict:
@@ -61,11 +61,7 @@ def _tok_meta(steps: int) -> dict:
 def bpe_tokenizer_exists(path: str, steps: int) -> bool:
     """Fully committed (parquet _SUCCESS on both components) AND built by
     the CURRENT trainer with the same merge count."""
-    return (
-        os.path.exists(os.path.join(path, "merges", "_SUCCESS"))
-        and os.path.exists(os.path.join(path, "vocab", "_SUCCESS"))
-        and _read_meta(path) == _tok_meta(steps)
-    )
+    return _BPE.exists(path, _tok_meta(steps))
 
 
 def write_bpe_tokenizer(
@@ -76,22 +72,20 @@ def write_bpe_tokenizer(
     replace: bool = False,
 ) -> None:
     """Persist a trained tokenizer: (step, p, q, cnt) merges and the
-    encoded (word, w, toks) vocabulary. Staged under a sibling temp root,
-    published by ONE rename; at a content-addressed path a valid existing
-    artifact is the keep-winner (the trainer is deterministic, so same
-    path means same bytes — concurrent writers never delete a live
-    artifact under readers). ``replace=True`` for retraining over
-    different data at the same path (not reader-safe)."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    merges.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "merges"))
-    # the vocab is bounded (distinct training words) but not tiny: keep
-    # the writer's natural parallelism, readers broadcast it anyway
-    vocab.write.mode("overwrite").parquet(os.path.join(tmp, "vocab"))
-    with open(os.path.join(tmp, _META_NAME), "w", encoding="utf-8") as f:
-        json.dump(_tok_meta(steps), f)
-    if replace:
-        shutil.rmtree(path, ignore_errors=True)
-    _publish_atomic(tmp, path, keep_if_valid=lambda p: bpe_tokenizer_exists(p, steps))
+    encoded (word, w, toks) vocabulary, through the generation store's
+    build (the trainer is deterministic, so a valid existing artifact at
+    the content-addressed path is the keep-winner). ``replace=True`` for
+    retraining over different data at the same path (not reader-safe)."""
+
+    def stage(_data_dir, tmp):
+        merges.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(tmp, "merges")
+        )
+        # the vocab is bounded (distinct training words) but not tiny: keep
+        # the writer's natural parallelism, readers broadcast it anyway
+        vocab.write.mode("overwrite").parquet(os.path.join(tmp, "vocab"))
+
+    _BPE.build(path, _tok_meta(steps), stage, replace=replace)
 
 
 def load_bpe_tokenizer(
@@ -110,15 +104,14 @@ def load_bpe_tokenizer(
     genuinely accept any artifact at the path. A caller that trained (or
     expects) a specific tokenizer must pass its ``steps`` to get the full
     strict gate — the plan-facing entries all do."""
-    meta = _read_meta(path)
-    if meta is None:
-        raise ValueError(f"{path!r} does not hold a committed BPE tokenizer")
-    want_steps = meta.get("steps", -1) if steps is None else steps
-    if meta != _tok_meta(want_steps):
-        raise ValueError(
-            f"{path!r} does not hold a committed current-version BPE "
-            f"tokenizer (found meta {meta!r})"
-        )
-    merges = spark.read.parquet(os.path.join(path, "merges"))
-    vocab = spark.read.parquet(os.path.join(path, "vocab"))
-    return merges, vocab
+    if steps is None:
+        steps = (_read_meta(path) or {}).get("steps", -1)
+    return _BPE.load(
+        spark,
+        path,
+        lambda _data, _meta: (
+            spark.read.parquet(os.path.join(path, "merges")),
+            spark.read.parquet(os.path.join(path, "vocab")),
+        ),
+        identity=_tok_meta(steps),
+    )

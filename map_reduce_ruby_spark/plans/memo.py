@@ -12,17 +12,21 @@ of outliving their dict slot.
 
 Capacity default 8: a session touches a handful of sf_dirs at most, and
 the memo must stay far below executor storage so eviction is about
-hygiene, not pressure.
+hygiene, not pressure. The generation store's attach memo
+(operators/artifact_store._ATTACH) is one more instance, at capacity 16.
 """
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 from typing import Any, Callable
 
 
 class LruMemo:
-    """get_or_build with least-recently-used eviction and a release hook."""
+    """get_or_build with least-recently-used eviction and a release hook.
+    Thread-safe: the lookup and the insert each run under a lock (the
+    build itself runs outside it, so a slow build blocks no reader)."""
 
     def __init__(
         self,
@@ -34,25 +38,35 @@ class LruMemo:
         self._entries: OrderedDict = OrderedDict()
         self._capacity = capacity
         self._unpersist = unpersist
+        self._lock = threading.Lock()
 
     def get_or_build(self, key: Any, build: Callable[[], Any]) -> Any:
-        if key in self._entries:
-            self._entries.move_to_end(key)
-            return self._entries[key]
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                return self._entries[key]
         value = build()  # build BEFORE evicting: a failed build evicts nothing
-        while len(self._entries) >= self._capacity:
-            _k, old = self._entries.popitem(last=False)
-            if self._unpersist is not None:
+        evicted = []
+        with self._lock:
+            if key in self._entries:  # a concurrent build landed first: keep it
+                evicted.append(value)
+                value = self._entries[key]
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            while len(self._entries) > self._capacity:
+                evicted.append(self._entries.popitem(last=False)[1])
+        if self._unpersist is not None:
+            for old in evicted:
                 self._unpersist(old)
-        self._entries[key] = value
         return value
 
     def get(self, key: Any) -> Any:
         """Return (and LRU-touch) an existing entry; KeyError if absent.
         For sites whose build path needs pre-checks (e.g. skip-memo on an
         empty corpus) before get_or_build."""
-        self._entries.move_to_end(key)
-        return self._entries[key]
+        with self._lock:
+            self._entries.move_to_end(key)
+            return self._entries[key]
 
     def __len__(self) -> int:
         return len(self._entries)

@@ -532,12 +532,15 @@ def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "up to k tiny cell files each, and the probe's cost at 100 TB becomes "
     "file-open overhead and task scheduling instead of IO — the classic "
     "small-files problem Delta/Iceberg ship OPTIMIZE for. compact merges "
-    "every committed generation into ONE new ingest partition under the "
-    "same lock/stage/rename/meta-commit protocol as append (readers "
-    "planned before the commit keep their old generations — compaction "
-    "never deletes, vacuum reclaims unlisted generations after a grace "
-    "window). This entry builds from batch-1, appends batch-2, compacts, "
-    "vacuums at grace=0, then probes: gated on the SAME split oracle as "
+    "every committed generation into ONE new ingest partition through the "
+    "generation store's lock/stage/rename/meta-commit protocol "
+    "(operators/artifact_store.py; readers planned before the commit keep "
+    "their old generations — compaction never deletes, vacuum reclaims "
+    "unlisted generations after a grace window). This entry builds from "
+    "batch-1, appends batch-2, compacts, vacuums with a one-hour grace "
+    "window (vacuum_index(path, grace_sec=3600.0): the cached root is "
+    "shared across processes, so retired generations wait out readers), "
+    "then probes: gated on the SAME split oracle as "
     "knn_ivf_incremental, so a compaction that dropped, duplicated, or "
     "perturbed any row hash-mismatches. File-count and batch_id-"
     "idempotency-survival are pinned in tests/test_ann_compaction.py.",

@@ -896,12 +896,15 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rebuild's exactly, while per-term document frequencies are computed "
     "per query from the pruned posting lists — then the generations are "
     "COMPACTED (range-clustered on (tb, term): buckets stay partition-"
-    "pruned, files term-contiguous for footer min/max) and vacuumed at "
-    "grace=0. The query scan reads <= |terms|/64 of the index bytes "
+    "pruned, files term-contiguous for footer min/max) and vacuumed with "
+    "a one-hour grace window (vacuum_index(path, grace_sec=3600.0): the "
+    "cached root is shared across processes, so retired generations wait "
+    "out readers). The query scan reads <= |terms|/64 of the index bytes "
     "(partition pruning on tb, plan-asserted in tests/test_text_index."
     "py). Gated on the full-rebuild SQL oracle over A ∪ B: a dropped "
     "batch, drifted counters, or a lossy compaction hash-mismatches. "
-    "Same lock/stage/rename/CAS/batch_id machinery as append_ivf_batch.",
+    "Build, append, compaction and attach run through the one generation "
+    "store (operators/artifact_store.py) the ANN and NB stores use.",
     tags=("text", "retrieval", "incremental", "persisted", "compaction",
           "custom-operator", "extension"),
 )
@@ -916,7 +919,7 @@ def text_bm25_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_bm25_index,
         write_bm25_index,
     )
-    from map_reduce_ruby_spark.operators.ann_index import (
+    from map_reduce_ruby_spark.operators.artifact_store import (
         read_index_meta,
         vacuum_index,
     )
@@ -1828,8 +1831,9 @@ def kn_perplexity_scores(
     oracle=_bpe_encode_sql(),
     doc="The DURABLE form of text_bpe_encode: the trained tokenizer — "
     "learned merge list + fully-encoded word vocabulary — is persisted as "
-    "a versioned parquet artifact (operators/tokenizer_store.py, the same "
-    "staged-atomic keep-winner publish as the ANN/BM25 stores) and the "
+    "a versioned parquet artifact (operators/tokenizer_store.py, built "
+    "and attached through the one generation store the ANN/BM25/NB "
+    "stores use — operators/artifact_store.py) and the "
     "corpus is encoded FROM STORAGE: a restarted session broadcasts the "
     "stored vocab against the exploded corpus with zero training jobs "
     "(mtimes pinned in tests). BPE deliberately has NO append path — "

@@ -1,6 +1,7 @@
-"""operators/artifact_store.py unit tests (no Spark needed): the shared
-commit protocol extracted from ann_index — atomic publish semantics and
-the store-neutral vacuum's data-root discovery."""
+"""operators/artifact_store.py unit tests (no Spark needed): the
+generation store's commit protocol — atomic publish semantics, the
+store-neutral vacuum's data-root discovery, and the session-safe attach
+memo."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 import pytest
 
 from map_reduce_ruby_spark.operators.artifact_store import (
+    GenerationStore,
     _publish_atomic,
     vacuum_index,
 )
@@ -144,3 +146,46 @@ def test_append_lock_steals_only_a_dead_writers_lock(tmp_path, monkeypatch):
         stop.set()
         t.join()
         os.unlink(lock)
+
+
+class _Session:
+    """Stands in for a SparkSession: weak-referenceable, identity-hashed."""
+
+
+def test_attach_memo_is_session_safe(tmp_path):
+    """A warm attach is served only to the session object it was built
+    for: a replacement session — even one reusing a dead session's id()
+    — misses, and the memo key holds no strong reference, so a dropped
+    session can be collected while its entry is still cached."""
+    import gc
+    import weakref
+
+    path = str(tmp_path)
+    with open(os.path.join(path, "_META.json"), "w") as f:
+        json.dump({"format": "probe", "version": 1}, f)
+    store = GenerationStore("probe artifact", "write_probe", None)
+    builds = []
+
+    def scan(_data, meta):
+        builds.append(meta)
+        return object()
+
+    first_session = _Session()
+    first = store.load(first_session, path, scan)
+    assert store.load(first_session, path, scan) is first  # warm attach
+    assert len(builds) == 1
+
+    replacement = _Session()
+    assert store.load(replacement, path, scan) is not first
+    assert len(builds) == 2
+
+    dropped, dead_id = weakref.ref(first_session), id(first_session)
+    del first_session
+    gc.collect()
+    assert dropped() is None, "the memo key kept a dropped session alive"
+    # a new session that lands on the dead one's address still misses
+    spares = [_Session() for _ in range(1000)]
+    reused = next((s for s in spares if id(s) == dead_id), None)
+    assert reused is not None, "no replacement session reused the dead id"
+    assert store.load(reused, path, scan) is not first
+    assert len(builds) == 3

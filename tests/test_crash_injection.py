@@ -1,6 +1,7 @@
-"""Kill-point harness over the shared artifact-store compaction/vacuum
-protocol (operators/artifact_store.py), run against every store built on
-it (IVF cells, PQ codes, BM25 postings, NB counts).
+"""Kill-point harness over the generation store's append, compaction and
+vacuum protocol (operators/artifact_store.py), run against every
+appendable store built on it (IVF cells, PQ codes, BM25 postings, NB
+counts).
 
 Every mutation in the protocol is a filesystem primitive (staged write,
 one-rename publish, atomic meta replace), so raising at a chosen point
@@ -402,79 +403,115 @@ def _readers_for(store, spark, path):
     return read, lambda: compact_nb_model(spark, path), "counts"
 
 
-def test_append_kill_points_recoverable(spark, sf_dir, tmp_path, monkeypatch):
-    """The append path's two commit points, killed and retried (NB store —
-    the protocol is the shared one): a crash between the generation
-    publish and the meta commit leaves an UNLISTED orphan readers never
-    see, and the retried append (same batch id) converges to exactly the
-    batch-rebuild statistics; a crash after the meta commit is durable,
-    so the retry is a no-op."""
-    from map_reduce_ruby_spark.operators import nb_store
+def _append_ops(store, spark, sf_dir):
+    """(rows, key column, write(df, path), append(df, path, batch_id)) —
+    the store's public build and append entry points."""
+    if store in ("ivf", "pq"):
+        from map_reduce_ruby_spark.operators.ann_index import (
+            append_ivf_batch,
+            append_pq_batch,
+            write_ivf_index,
+            write_pq_index,
+        )
+
+        v = _vectors(spark, sf_dir)
+        if store == "ivf":
+            return (
+                v,
+                "id",
+                lambda df, p: write_ivf_index(spark, df, p, k=4),
+                lambda df, p, b: append_ivf_batch(spark, df, p, batch_id=b),
+            )
+        dim = len(v.select("e").first()[0])
+        return (
+            v,
+            "id",
+            lambda df, p: write_pq_index(spark, df, p, dim=dim, n_sub=4, k=4),
+            lambda df, p, b: append_pq_batch(spark, df, p, batch_id=b),
+        )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    if store == "bm25":
+        from map_reduce_ruby_spark.operators.text_index import (
+            append_bm25_batch,
+            write_bm25_index,
+        )
+
+        return (
+            docs.select("doc_id", "text"),
+            "doc_id",
+            lambda df, p: write_bm25_index(spark, df, p),
+            lambda df, p, b: append_bm25_batch(spark, df, p, batch_id=b),
+        )
     from map_reduce_ruby_spark.operators.nb_store import (
         append_nb_batch,
-        load_nb_model,
         write_nb_model,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
+    return (
+        docs.select("doc_id", "lang", "text"),
+        "doc_id",
+        lambda df, p: write_nb_model(spark, df, p, 64),
+        lambda df, p, b: append_nb_batch(spark, df, p, batch_id=b),
     )
-    a = docs.filter(F.col("doc_id") % 3 == 0)
-    b = docs.filter(F.col("doc_id") % 3 == 1)
-    path = str(tmp_path / "nb_append")
+
+
+# 'nb' is the default-run smoke; the other stores run the same append
+# protocol and are slow breadth (the compaction sweep's split)
+@pytest.mark.parametrize(
+    "store",
+    [
+        s if s == "nb" else pytest.param(s, marks=pytest.mark.slow)
+        for s in sorted(_STORES)
+    ],
+)
+def test_append_kill_points_recoverable(
+    store, spark, sf_dir, tmp_path, monkeypatch
+):
+    """The append path's two commit points, killed and retried: a crash
+    between the generation publish and the meta commit leaves an UNLISTED
+    orphan readers never see, and the retried append (same batch id)
+    converges to exactly what an uninterrupted append produces; a crash
+    after the meta commit is durable, so the retry is a no-op."""
+    rows, key, write, append = _append_ops(store, spark, sf_dir)
+    a = rows.filter(F.col(key) % 3 == 0)
+    b = rows.filter(F.col(key) % 3 == 1)
+    c = rows.filter(F.col(key) % 3 == 2)
+    path = str(tmp_path / f"{store}_append")
 
     def read(p):
-        counts, class_docs, _m = load_nb_model(spark, p)
-        return [
-            sorted(map(list, counts.collect())),
-            sorted(map(list, class_docs.collect())),
-        ]
+        return _readers_for(store, spark, p)[0]()
 
-    write_nb_model(spark, a, path, 64)
+    write(a, path)
     base = read(path)
 
-    # batch-rebuild oracle: one model trained on A ∪ B in one shot
-    rebuilt = str(tmp_path / "nb_rebuilt")
-    write_nb_model(spark, a.unionByName(b), rebuilt, 64)
-    want = read(rebuilt)
+    # the uninterrupted twin: build(A) + append(B) with no kill
+    twin = str(tmp_path / f"{store}_twin")
+    write(a, twin)
+    append(b, twin, "b2")
+    want = read(twin)
 
     # K: killed between the batch generation's publish and the meta
-    # commit — readers still see exactly the base model
-    real_pub = nb_store._publish_atomic
-
-    def pub_then_die(tmp, dst, keep_if_valid=None):
-        real_pub(tmp, dst, keep_if_valid)
-        if "ingest=" in os.path.basename(dst):
-            raise InjectedKill("killed after publish rename")
-
+    # commit — readers still see exactly the base artifact
     with monkeypatch.context() as m:
-        m.setattr(nb_store, "_publish_atomic", pub_then_die)
+        _kill_publish(m, "after")
         with pytest.raises(InjectedKill):
-            append_nb_batch(spark, b, path, batch_id="b2")
+            append(b, path, "b2")
     assert read(path) == base
     assert read_index_meta(path)["ingests"] == [1]
 
     # retry with the SAME batch id: the orphan is replaced, the append
-    # commits, and the maintained model equals the batch rebuild
-    append_nb_batch(spark, b, path, batch_id="b2")
+    # commits, and the result equals the uninterrupted append
+    append(b, path, "b2")
     assert read(path) == want
     assert read_index_meta(path)["batch_ids"] == ["b2"]
 
     # K: killed AFTER the meta commit — durable; the retry is a no-op
-    c = docs.filter(F.col("doc_id") % 3 == 2)
-    real_meta = nb_store._write_meta_atomic
-
-    def meta_then_die(p2, meta2):
-        real_meta(p2, meta2)
-        raise InjectedKill("killed after meta commit")
-
     with monkeypatch.context() as m:
-        m.setattr(nb_store, "_write_meta_atomic", meta_then_die)
+        _kill_after_meta(m)
         with pytest.raises(InjectedKill):
-            append_nb_batch(spark, c, path, batch_id="b3")
+            append(c, path, "b3")
     committed = read(path)
-    meta = read_index_meta(path)
-    assert meta["batch_ids"] == ["b2", "b3"]
-    append_nb_batch(spark, c, path, batch_id="b3")  # retry: no-op
+    assert read_index_meta(path)["batch_ids"] == ["b2", "b3"]
+    append(c, path, "b3")  # retry: no-op
     assert read(path) == committed
     assert read_index_meta(path)["batch_ids"] == ["b2", "b3"]

@@ -1,5 +1,6 @@
 """LruMemo (plans/memo.py): bounded LRU with release hook — the shared
-session-memo machinery behind the IVF/PQ/SQ8/BPE/SNM caches."""
+session-memo machinery behind the IVF/PQ/SQ8/BPE/SNM caches and the
+generation store's attach memo."""
 
 from __future__ import annotations
 
@@ -45,3 +46,55 @@ def test_get_missing_raises_and_capacity_guard():
         m.get("missing")
     with pytest.raises(ValueError):
         LruMemo(capacity=0)
+
+
+def test_concurrent_get_or_build_is_safe_and_releases_losers():
+    """Threads hammering a tiny memo (more threads than cores, a short
+    switch interval): no lookup or eviction races into a KeyError, the
+    bound holds, and every built value is either live in the memo or was
+    released — none is leaked by a concurrent same-key build."""
+    import sys
+    import threading
+
+    released = []
+    built = []
+    lock = threading.Lock()
+    m = LruMemo(capacity=2, unpersist=released.append)
+
+    def build(k):
+        v = object()
+        with lock:
+            built.append(v)
+        return v
+
+    errors = []
+
+    def worker(seed):
+        try:
+            for i in range(2000):
+                k = (seed * 7 + i) % 5
+                m.get_or_build(k, lambda k=k: build(k))
+                if i % 3 == 0:
+                    try:
+                        m.get(k)
+                    except KeyError:
+                        pass  # evicted by another thread: a legitimate miss
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(m) <= 2
+    live = {id(m.get(k)) for k in range(5) if k in m}
+    assert {id(v) for v in built} == live | {id(v) for v in released}
+    assert len(released) == len(built) - len(live)

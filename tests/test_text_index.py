@@ -18,7 +18,7 @@ from map_reduce_ruby_spark.operators import (
     load_bm25_postings,
     write_bm25_index,
 )
-from map_reduce_ruby_spark.operators.ann_index import read_index_meta, vacuum_index
+from map_reduce_ruby_spark.operators.artifact_store import read_index_meta, vacuum_index
 
 _TERMS = ("data", "query", "join")
 
