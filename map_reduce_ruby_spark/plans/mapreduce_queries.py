@@ -287,10 +287,12 @@ def mr_partition_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY user_id
     """,
     doc="DataFrame adapter (core/df_adapter.py): the reference's binary "
-    "reduce contract run per key group via applyInPandas (max_cents folds "
-    "with a Python lambda pairwise, exactly reduce(key, v1, v2)) alongside "
-    "primitive fast-path folds (sum/count compile to JVM aggregates). "
-    "Integer-cents space keeps the fold order-independent.",
+    "reduce contract run per key group via applyInArrow's iterator form "
+    "(max_cents folds with a Python lambda pairwise over the group's Arrow "
+    "batches as they stream in, exactly reduce(key, v1, v2)); the primitive "
+    "folds of the same call (sum) are pyarrow.compute aggregates per batch, "
+    "and a call of primitives only compiles to JVM aggregates. Integer-cents "
+    "space keeps the fold order-independent.",
     tags=("mapreduce", "dataframe-adapter"),
 )
 def df_reduce_by_key_custom(spark: SparkSession, sf_dir: str) -> DataFrame:

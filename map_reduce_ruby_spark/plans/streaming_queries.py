@@ -40,10 +40,13 @@ def _spread(batch_df: DataFrame) -> DataFrame:
     task, so every per-batch transform (the minhash sketch, the NB gram
     count) runs on a single core while the rest idle — measured on the
     probe entry: addBatch is ~95% of drain time and the sketch task is
-    serial (guide §2.6 idle capacity). Round-robin repartition spreads the
-    batch once (deterministic row placement via sort-before-repartition;
-    all downstream results are row-order-independent aggregates/appends,
-    so output is unchanged). Batches already wider than the core count — a
+    serial (guide §2.6 idle capacity). A round-robin repartition spreads
+    the batch once. The code does not sort; Spark's round-robin exchange
+    makes the row placement deterministic itself, by sorting each input
+    partition before it deals rows out
+    (``spark.sql.execution.sortBeforeRepartition``, default true). All
+    downstream results are row-order-independent aggregates/appends, so
+    output is unchanged. Batches already wider than the core count — a
     real day-batch at scale — pass through untouched, so this never
     SHRINKS parallelism or adds a shuffle where width is adequate."""
     sc = batch_df.sparkSession.sparkContext
