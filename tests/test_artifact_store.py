@@ -183,9 +183,14 @@ def test_attach_memo_is_session_safe(tmp_path):
     del first_session
     gc.collect()
     assert dropped() is None, "the memo key kept a dropped session alive"
-    # a new session that lands on the dead one's address still misses
-    spares = [_Session() for _ in range(1000)]
-    reused = next((s for s in spares if id(s) == dead_id), None)
+    # a new session that lands on the dead one's address still misses; the
+    # allocator hands that address out only after the free blocks of the
+    # same size ahead of it, and a long test process has over a thousand
+    spares, reused = [], None
+    while reused is None and len(spares) < 100_000:
+        spares.append(_Session())
+        if id(spares[-1]) == dead_id:
+            reused = spares[-1]
     assert reused is not None, "no replacement session reused the dead id"
     assert store.load(reused, path, scan) is not first
     assert len(builds) == 3
