@@ -58,10 +58,10 @@ def port_1_compat_facade(spark) -> dict:
     """Smallest diff: the reference's exact two-class worker API.
 
     Mapper.map buffers driver-side (same as the reference worker's local
-    accumulation); pass memory_limit= to get the reference's bounded-buffer
-    spill discipline (pairs spill to sorted chunk files at the JSON-size
-    threshold, exactly mapper.rb:50-52). Use port 2/3 for cluster-sized
-    sources."""
+    accumulation) under the reference's bounded-buffer spill discipline:
+    pairs spill to sorted chunk files at the JSON-size threshold, exactly
+    mapper.rb:50-52, and memory_limit defaults to the reference's 16 MiB.
+    Use port 2/3 for cluster-sized sources."""
     mapper = Mapper(WordCounter(), spark, memory_limit=16 * 1024 * 1024)
     for text in TEXTS:
         mapper.map(text)  # thread-safe, like the reference's MonitorMixin

@@ -19,18 +19,15 @@ Fidelity details:
 - ``chunk_limit < 2`` raises ``InvalidChunkLimit``
   (reference lib/map_reduce.rb:18, mapper.rb:77, reducer.rb:72); beyond the
   guard the value is ignored — merge fan-in is Spark's concern.
-- ``memory_limit`` is HONORED (reference mapper.rb:21,50-52): when set, the
-  user ``map`` runs eagerly and yielded pairs accumulate in a driver buffer
-  under the reference's exact JSON-size accounting; crossing the limit
-  spills the buffer as a sorted (and combined, when the implementation has
-  ``reduce``) reference-format chunk file (mapper.rb:123-141 ``write_chunk``),
-  so driver memory stays bounded by ``memory_limit`` regardless of input
-  volume. ``shuffle`` then merges the spilled chunks THROUGH Spark (the
-  chunks become a distributed source; Spark's sort-based shuffle is the
-  k-way merge) and produces partition files byte-identical to the
-  unbounded path's.
-- With ``memory_limit=None`` (default) inputs buffer unmapped and the user
-  ``map`` runs lazily inside Spark tasks — the distributed fast path.
+- ``memory_limit`` (default 16 MiB, reference mapper.rb:21) bounds the
+  driver buffer exactly as the reference bounds its worker's: ``map`` runs
+  the user ``map`` at once and accounts each yielded pair's JSON size
+  (mapper.rb:44-54); crossing the limit spills the buffer as a sorted (and
+  combined, when the implementation has ``reduce``) reference-format chunk
+  file (mapper.rb:123-141 ``write_chunk``). ``shuffle`` then merges the
+  spilled chunks THROUGH Spark (the chunks become a distributed source;
+  Spark's sort-based shuffle is the k-way merge), so the partition files do
+  not depend on where the spills fell.
 - A ``Reducer`` with no ``reduce`` on the implementation works while keys are
   distinct and raises ``AttributeError`` (Ruby ``NoMethodError``) only when
   two equal keys actually meet — lazily, exactly like the reference
@@ -39,12 +36,12 @@ Fidelity details:
   (``json([key, value])`` per line, key-sorted), byte-compatible both ways.
 
 SCALE NOTE: the façade is the reference's single-WORKER surface — inputs
-arrive through driver-side ``map`` calls either way, exactly like the
-reference worker process. ``memory_limit`` bounds the driver's MEMORY the
-way the reference bounds the worker's; the 100 TB path remains handing
-``Job.run`` an RDD/DataFrame directly (the map function then runs inside
-Spark tasks against a distributed source), or writing reference-format
-chunks to shared storage via ``Job.shuffle_to_files(shared_storage=True)``.
+arrive through driver-side ``map`` calls, exactly like the reference worker
+process, and ``memory_limit`` bounds the driver's memory at any input
+volume. The 100 TB path remains handing ``Job.run`` an RDD/DataFrame
+directly (the map function then runs inside Spark tasks against a
+distributed source), or writing reference-format chunks to shared storage
+via ``Job.shuffle_to_files(shared_storage=True)``.
 """
 
 from __future__ import annotations
@@ -72,25 +69,21 @@ def _check_chunk_limit(chunk_limit: int) -> None:
 
 
 class Mapper:
-    """Reference ``MapReduce::Mapper`` (lib/map_reduce/mapper.rb): buffer
-    inputs via ``map``, then ``shuffle`` to a partition->file map."""
+    """Reference ``MapReduce::Mapper`` (lib/map_reduce/mapper.rb): map
+    inputs into a bounded, spilling buffer via ``map``, then ``shuffle`` to
+    a partition->file map."""
 
     def __init__(
         self,
         implementation: Any,
         spark: SparkSession,
         partitioner: Callable[[Any], int] | None = None,
-        memory_limit: int | None = None,
+        memory_limit: int = 16 * 1024 * 1024,
     ):
         self._impl = implementation
         self._spark = spark
         self._partitioner = partitioner or HashPartitioner(32)
-        self._inputs: list[Any] = []
-        # memory_limit honored (reference mapper.rb:21): None = the lazy
-        # distributed path (map runs inside Spark tasks); an int = the
-        # reference's bounded-buffer spill path (map runs eagerly, pairs
-        # spill to sorted chunk files at the JSON-size threshold).
-        self._memory_limit = None if memory_limit is None else int(memory_limit)
+        self._memory_limit = int(memory_limit)
         # spill state (reference mapper.rb:28-30): buffered (partition,
         # key, value) items, their reference-accounted JSON byte size, and
         # the spilled chunk paths in write order.
@@ -111,19 +104,13 @@ class Mapper:
         concurrently from multiple threads (reference mapper.rb:45
         ``synchronize``).
 
-        Without ``memory_limit`` the input is buffered and the user's
-        ``map`` runs lazily at shuffle time, inside Spark tasks. With
-        ``memory_limit`` the user's ``map`` runs NOW and each yielded pair
-        lands in the bounded buffer under the reference's JSON-size
+        The user's ``map`` runs NOW (its errors raise here) and each yielded
+        pair lands in the bounded buffer under the reference's JSON-size
         accounting (mapper.rb:44-54): ``[[partition, key], value]`` costs
         its ``JSON.generate`` bytesize, and crossing the limit spills the
         sorted (and pre-combined, when the implementation has ``reduce``)
         buffer to a reference-format chunk file — driver memory is bounded
         by ``memory_limit`` at any input volume."""
-        if self._memory_limit is None:
-            with self._ingest_lock:
-                self._inputs.append((args, kwargs))
-            return
         part = self._partitioner
         for key, value in self._impl.map(*args, **kwargs):
             pid = part(key)
@@ -187,46 +174,50 @@ class Mapper:
         (the reference's yield-then-cleanup ``ensure``). Without: return the
         map; the caller owns the files.
 
-        With ``memory_limit`` set, the pairs live in spilled sorted chunk
-        files (plus the final in-memory buffer, flushed here — reference
-        mapper.rb:81); the chunks become a distributed Spark source and
-        Spark's sort-based shuffle replaces the reference's k-way merge
-        (mapper.rb:83-96). The spilled chunks are deleted afterwards even
-        on error (the reference's ``ensure``), and the partition files are
-        byte-identical to the unbounded path's (pinned by
-        tests/test_compat.py::test_memory_limit_output_byte_identical_with_reduce
-        and ..._no_reduce_fifo).
+        The pairs live in spilled sorted chunk files (plus the final
+        in-memory buffer, flushed here — reference mapper.rb:81); each chunk
+        becomes one Spark task's streamed input (a chunk is at most about
+        ``memory_limit`` bytes by construction) and Spark's sort-based
+        shuffle replaces the reference's k-way merge (mapper.rb:83-96). In
+        no-reduce mode duplicates keep input order: chunks spill in input
+        order and the spill sort is stable, so ``stable=True``'s (chunk
+        index, line number) sequence is the reference's FIFO merge order
+        (priority_queue.rb:35,50-53). The spilled chunks are deleted
+        afterwards even on error (the reference's ``ensure``), so a second
+        shuffle on the same mapper yields no partitions (mapper.rb:88-93).
+        The chunks live on the local filesystem, shared with ``local[k]``
+        executors: the façade is one worker process, as in the reference.
         """
         _check_chunk_limit(chunk_limit)
-        impl_map = self._impl.map
         reduce_fn = getattr(self._impl, "reduce", None)
-        n_parts = getattr(self._partitioner, "num_partitions", 32)
         out = out_dir or tempfile.mkdtemp(prefix="mr_shuffle_")
-        if self._memory_limit is not None:
-            partitions = self._shuffle_from_spills(reduce_fn, n_parts, out)
-        else:
-            job = Job(
-                map_fn=lambda ak: impl_map(*ak[0], **ak[1]),
-                reduce_fn=reduce_fn,
-                partitioner=self._partitioner,
-                num_partitions=n_parts,
+        with self._ingest_lock:
+            self._write_chunk()  # flush the tail buffer (mapper.rb:81)
+            chunks, self._spill_chunks = self._spill_chunks, []
+
+        def _pairs(path: str) -> Iterator[tuple[Any, Any]]:
+            with open(path, encoding="utf-8") as f:
+                for line in f:
+                    (_pid, key), value = json.loads(line)
+                    yield key, value
+
+        job = Job(
+            map_fn=_pairs,
+            reduce_fn=reduce_fn,
+            partitioner=self._partitioner,
+            num_partitions=getattr(self._partitioner, "num_partitions", 32),
+        )
+        try:
+            inputs = self._spark.sparkContext.parallelize(
+                chunks, numSlices=max(1, len(chunks))
             )
-            # shuffle CONSUMES the mapper state (reference mapper.rb:88-93
-            # ensure: spilled chunks deleted, buffer already reset — a
-            # second shuffle on the same mapper yields EMPTY partitions);
-            # the spill path gets this for free, the lazy path must take
-            # the inputs out of the mapper here.
-            with self._ingest_lock:
-                inputs, self._inputs = self._inputs, []
-            # No-reduce mode defaults to FIFO-stable duplicates: the façade
-            # advertises byte-compatible chunk files, and the reference's
-            # merge keeps equal-key duplicates in input order
-            # (lib/map_reduce/priority_queue.rb:35,50-53, pinned by
-            # spec/map_reduce/mapper_spec.rb:89-125). With a reduce impl the
-            # flag is moot (keys are unique after the fold) and costs nothing.
             partitions = job.shuffle_to_files(
                 self._spark, inputs, out, stable=reduce_fn is None
             )
+        finally:
+            for p in chunks:
+                if os.path.exists(p):
+                    os.unlink(p)
         if block is None:
             return partitions
         try:
@@ -236,56 +227,6 @@ class Mapper:
             for path in partitions.values():
                 if os.path.exists(path):
                     os.unlink(path)
-
-    def _shuffle_from_spills(
-        self, reduce_fn: Callable | None, n_parts: int, out: str
-    ) -> dict[int, str]:
-        """Shuffle from the spilled chunk files: each chunk becomes one
-        task's streamed input (a chunk is at most ~memory_limit bytes by
-        construction — no task re-buffers the whole dataset), lines parse
-        back to (key, value), and the SAME Job machinery as the unbounded
-        path partitions/sorts/folds them. FIFO stability holds end-to-end:
-        chunks spill in input order and the spill sort is stable, so
-        (chunk index, line number) — the order the union RDD yields and
-        ``stable=True`` sequences — preserves input order among equal
-        keys, matching the reference's FIFO k-way merge
-        (priority_queue.rb:35,50-53). Single-process façade contract: the
-        spill files live on the worker-local filesystem, shared with local
-        [k] executors; a porting user on a real cluster hands Job.run a
-        distributed source instead."""
-        with self._ingest_lock:
-            self._write_chunk()  # flush the tail buffer (mapper.rb:81)
-            chunks, self._spill_chunks = self._spill_chunks, []
-        try:
-            sc = self._spark.sparkContext
-            indexed = sc.parallelize(
-                list(enumerate(chunks)), numSlices=max(1, len(chunks))
-            )
-
-            def _lines(ip: tuple[int, str]) -> Iterator[str]:
-                with open(ip[1], encoding="utf-8") as f:
-                    for line in f:
-                        if line.strip():
-                            yield line
-
-            def _parse(line: str) -> list[tuple[Any, Any]]:
-                (_pid, key), value = json.loads(line)
-                return [(key, value)]
-
-            job = Job(
-                map_fn=_parse,
-                reduce_fn=reduce_fn,
-                partitioner=self._partitioner,
-                num_partitions=n_parts,
-            )
-            return job.shuffle_to_files(
-                self._spark, indexed.flatMap(_lines), out,
-                stable=reduce_fn is None,
-            )
-        finally:
-            for p in chunks:
-                if os.path.exists(p):
-                    os.unlink(p)
 
 
 class Reducer:

@@ -28,6 +28,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 ReduceFn = Callable[[Any, Any, Any], Any]
 
@@ -66,11 +67,19 @@ def reduce_by_key(
     if unknown:
         raise ValueError(f"unknown primitive fold(s) {unknown}; use one of {list(_PRIMITIVES)}")
 
+    aggs = [_PRIMITIVES[f](c).alias(c) for c, f in prim.items()]
     if not custom:
-        out = df.groupBy(*keys).agg(*[_PRIMITIVES[f](c).alias(c) for c, f in prim.items()])
+        out = df.groupBy(*keys).agg(*aggs)
     else:
-        grouped = df.select(*keys, *[F.col(c) for c in values])
-        arrow_schema = to_arrow_schema(grouped.schema)
+        # the primitive columns get the fast path's result types, read from
+        # the analyzed plan (no job); sum's input is cast to its result type
+        prim_fields = {f.name: f for f in df.select(*aggs).schema.fields}
+        grouped = df.select(*keys, *[
+            F.col(c).cast(prim_fields[c].dataType) if f == "sum" else F.col(c)
+            for c, f in values.items()
+        ])
+        schema = StructType([prim_fields.get(f.name, f) for f in grouped.schema.fields])
+        arrow_schema = to_arrow_schema(schema)
 
         # pyspark picks the streaming form of applyInArrow from these hints
         def fold_group(
@@ -92,7 +101,7 @@ def reduce_by_key(
             cols = {c: [row[c]] for c in arrow_schema.names}
             yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
 
-        out = grouped.groupBy(*keys).applyInArrow(fold_group, schema=grouped.schema)
+        out = grouped.groupBy(*keys).applyInArrow(fold_group, schema=schema)
 
     if sort_output:
         out = out.sortWithinPartitions(*keys)

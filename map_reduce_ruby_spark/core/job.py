@@ -32,7 +32,7 @@ from typing import Any, Callable, Iterable, Iterator
 from pyspark import RDD, SparkContext
 from pyspark.sql import SparkSession
 
-from map_reduce_ruby_spark.core.keys import SortKey
+from map_reduce_ruby_spark.core.keys import SortKey, canonical_json
 from map_reduce_ruby_spark.core.partitioner import HashPartitioner, PartitionFn
 from map_reduce_ruby_spark.sources.chunk_datasource import MANIFEST_NAME
 
@@ -49,6 +49,10 @@ class InvalidNumPartitions(MapReduceError):
 
 MapFn = Callable[[Any], Iterable[tuple[Any, Any]]]
 ReduceFn = Callable[[Any, Any, Any], Any]
+
+# run_arrow's map side hands a batch to the shuffle every this many distinct
+# keys (with a fold) or pairs (without), bounding the Python worker's memory
+COMBINE_FLUSH = 200_000
 
 
 def _hashable(k: Any) -> Any:
@@ -156,7 +160,10 @@ class Job:
     ) -> RDD:
         """Execute map -> shuffle(partition) -> [reduce] -> [sort] and return
         an ``RDD[(key, value)]`` partitioned by ``self.partitioner`` and, when
-        ``sort_output``, key-sorted within each partition (O15).
+        ``sort_output``, key-sorted within each partition (O15). With a
+        ``reduce_fn`` the fold is called as ``reduce_fn(key, v1, v2)`` with
+        the pair's own key (for keys that compare equal, such as 1 and 1.0,
+        one of them).
 
         ``stable=True`` (no-reduce mode only) additionally makes duplicates of
         equal keys come out in input order — the reference's FIFO-stable merge
@@ -190,28 +197,26 @@ class Job:
             )
             return out.map(lambda kv: (kv[0][0].key, kv[1]), preservesPartitioning=True)
 
-        pairs = rdd.flatMap(lambda x: ((SortKey(k), v) for k, v in map_fn(x)))
-
-        if self.reduce_fn is not None:
-            reduce_fn = self.reduce_fn
-            # reduceByKey = map-side combine (O4) + shuffle + reduce-side merge
-            # (O5/O14), all memory-bounded by Spark's ExternalMerger — the
-            # engine never materializes a partition. The fold receives
-            # key=None on this fast path (every reference example ignores the
-            # key in reduce); use run_with_key_in_reduce when the fold needs it.
-            out = pairs.reduceByKey(
-                lambda v1, v2: reduce_fn(None, v1, v2),
-                numPartitions=self.num_partitions,
-                partitionFunc=partition_func,
-            )
-        else:
-            # No-reduce passthrough (O16): duplicates preserved; the external
-            # sort below gives the key-sorted-within-partition guarantee.
+        if self.reduce_fn is None:
+            # No-reduce passthrough (O16): duplicates preserved; Spark's
+            # external sort gives the key-sorted-within-partition guarantee.
+            pairs = rdd.flatMap(lambda x: ((SortKey(k), v) for k, v in map_fn(x)))
             out = pairs.repartitionAndSortWithinPartitions(
                 numPartitions=self.num_partitions, partitionFunc=partition_func
             )
             return out.map(lambda kv: (kv[0].key, kv[1]), preservesPartitioning=True)
 
+        reduce_fn = self.reduce_fn
+        # reduceByKey = map-side combine (O4) + shuffle + reduce-side merge
+        # (O5/O14), all memory-bounded by Spark's ExternalMerger — the engine
+        # never materializes a partition. Each value carries its key so the
+        # fold receives it: reduce(key, v1, v2), as in the reference.
+        pairs = rdd.flatMap(lambda x: ((SortKey(k), (k, v)) for k, v in map_fn(x)))
+        out = pairs.reduceByKey(
+            lambda a, b: (a[0], reduce_fn(a[0], a[1], b[1])),
+            numPartitions=self.num_partitions,
+            partitionFunc=partition_func,
+        )
         if sort_output:
             # Post-aggregation rows are one per distinct key per partition;
             # sorting them reproduces O15. (At 100 TB, distinct-keys-per-
@@ -220,7 +225,7 @@ class Job:
             out = out.mapPartitions(
                 lambda it: iter(sorted(it, key=lambda kv: kv[0])), preservesPartitioning=True
             )
-        return out.map(lambda kv: (kv[0].key, kv[1]), preservesPartitioning=True)
+        return out.map(lambda kv: (kv[0].key, kv[1][1]), preservesPartitioning=True)
 
     # ------------------------------------------------------------ arrow run
 
@@ -229,7 +234,6 @@ class Job:
         spark: SparkSession,
         df: Any,
         sort_output: bool = True,
-        combine_flush: int = 200_000,
     ):
         """Arrow-batched execution of the SAME user protocol over a DataFrame:
         returns ``DataFrame(k string, v string)`` of canonical-JSON pairs,
@@ -253,12 +257,13 @@ class Job:
           representation, per the mr_composite_key_agg rule;
         - values must be JSON-representable (the reference's chunk wire
           contract, lib/map_reduce/mapper.rb:115): the reduce-side fold sees
-          values after one canonical-JSON roundtrip (tuples arrive as lists);
+          keys and values after one canonical-JSON roundtrip (tuples arrive
+          as lists);
         - FIFO-stable no-reduce output (``stable=True``) is not offered here;
           use ``run`` when byte-stable duplicate order matters.
 
         Map-side combine is memory-bounded: the per-task accumulator flushes
-        every ``combine_flush`` distinct keys (partial combines are correct
+        every ``COMBINE_FLUSH`` distinct keys (partial combines are correct
         under the associative+commutative contract and re-fold after the
         shuffle), so the MAP side cannot OOM the Python worker at any input
         size. Reduce-side state is bounded by DISTINCT KEYS PER PARTITION
@@ -280,9 +285,7 @@ class Job:
         # the two paths contract-identical
         part = lambda k: raw_part(k) % nparts  # noqa: E731
         steer = _steering_ids(spark, nparts)
-        canon = lambda o: json.dumps(  # noqa: E731 — reference byte layout
-            o, separators=(",", ":"), ensure_ascii=False
-        )
+        flush = COMBINE_FLUSH  # read per call: the closures ship this value
 
         def _rows(batch):
             cols = [c.to_pylist() for c in batch.columns]
@@ -297,9 +300,9 @@ class Job:
                     for t in _rows(batch):
                         for k, v in map_fn(t):
                             steers.append(steer[part(k)])
-                            ks.append(canon(k))
-                            vs.append(canon(v))
-                    if len(ks) >= combine_flush:
+                            ks.append(canonical_json(k))
+                            vs.append(canonical_json(v))
+                    if len(ks) >= flush:
                         yield _kv_batch(pa, steers, ks, vs)
                         steers, ks, vs = [], [], []
                 if ks:
@@ -316,8 +319,8 @@ class Job:
 
             def drain():
                 steers = [steer[part(rep[hk])] for hk in acc]
-                ks = [canon(rep[hk]) for hk in acc]
-                vs = [canon(v) for v in acc.values()]
+                ks = [canonical_json(rep[hk]) for hk in acc]
+                vs = [canonical_json(v) for v in acc.values()]
                 return _kv_batch(pa, steers, ks, vs)
 
             for batch in batches:
@@ -325,11 +328,11 @@ class Job:
                     for k, v in map_fn(t):
                         hk = _hashable(k)
                         if hk in acc:
-                            acc[hk] = reduce_fn(None, acc[hk], v)
+                            acc[hk] = reduce_fn(rep[hk], acc[hk], v)
                         else:
                             acc[hk] = v
                             rep[hk] = k
-                if len(acc) >= combine_flush:
+                if len(acc) >= flush:
                     yield drain()
                     acc.clear()
                     rep.clear()
@@ -370,9 +373,10 @@ class Job:
                 kc = batch.column(1).to_pylist()
                 vc = batch.column(2).to_pylist()
                 for kj, vj in zip(kc, vc):
-                    hk = _hashable(json.loads(kj))
+                    key = json.loads(kj)
+                    hk = _hashable(key)
                     if hk in acc:
-                        acc[hk] = reduce_fn(None, acc[hk], json.loads(vj))
+                        acc[hk] = reduce_fn(key, acc[hk], json.loads(vj))
                     else:
                         acc[hk] = json.loads(vj)
                         rep[hk] = kj
@@ -385,7 +389,7 @@ class Job:
                 yield pa.record_batch(
                     [
                         pa.array([rep[hk] for hk, _ in chunk], pa.string()),
-                        pa.array([canon(v) for _, v in chunk], pa.string()),
+                        pa.array([canonical_json(v) for _, v in chunk], pa.string()),
                     ],
                     names=["k", "v"],
                 )
@@ -397,37 +401,6 @@ class Job:
         # partitioner(key) afterwards (O6 placement preserved end-to-end)
         shuffled = mapped.repartition(nparts, F.col("steer"))
         return shuffled.mapInArrow(reduce_side, schema="k string, v string")
-
-    def run_with_key_in_reduce(self, spark: SparkSession, inputs: Any) -> RDD:
-        """Variant for reduce functions that actually use the key argument.
-
-        The common path (run) assumes the fold ignores ``key`` (true for every
-        reference spec and README example). This variant carries the key
-        through the fold at the cost of one extra tuple per value.
-        """
-        rdd = self._as_rdd(spark, inputs)
-        map_fn, reduce_fn, part = self.map_fn, self.reduce_fn, self.partitioner
-        if reduce_fn is None:
-            return self.run(spark, inputs)
-        pairs = rdd.flatMap(lambda x: ((SortKey(k), (k, v)) for k, v in map_fn(x)))
-        reduced = pairs.reduceByKey(
-            lambda a, b: (a[0], reduce_fn(a[0], a[1], b[1])),
-            numPartitions=self.num_partitions,
-            partitionFunc=lambda sk: part(sk.key),
-        )
-        return (
-            reduced.mapPartitions(
-                lambda it: iter(sorted(it, key=lambda kv: kv[0])), preservesPartitioning=True
-            )
-            .map(lambda kv: (kv[0].key, kv[1][1]), preservesPartitioning=True)
-        )
-
-    # ------------------------------------------------- enumerator-style API
-
-    def to_local_iterator(self, spark: SparkSession, inputs: Any) -> Iterator[tuple[Any, Any]]:
-        """Lazy (key, value) stream — the reference's block-less
-        ``Reducer#reduce`` Enumerator form (reference lib/map_reduce/reducer.rb:70)."""
-        return self.run(spark, inputs).toLocalIterator()
 
     # --------------------------------------------------- chunk-file interop
 
@@ -533,15 +506,12 @@ class Job:
                 )
             else:
                 result = self.run(spark, inputs, sort_output=True, stable=stable)
-                canon = lambda o: json.dumps(  # noqa: E731 — reference byte layout
-                    o, separators=(",", ":"), ensure_ascii=False
-                )
                 # RDD -> (key_json, value_json) rows is a narrow map: partition
                 # ids and in-partition sort order carry through to the writer,
                 # which emits chunk-<pid>-<writeid>.jsonl per task
                 # (TaskContext.partitionId + the writer's generation token)
                 # and reports (partition, file, rows) in its commit message.
-                rows = result.map(lambda kv: (canon(kv[0]), canon(kv[1])))
+                rows = result.map(lambda kv: (canonical_json(kv[0]), canonical_json(kv[1])))
                 kv_df = spark.createDataFrame(rows, CHUNK_SCHEMA)
             # the backend resolved above (driver-side registry) rides to the
             # writer's worker processes as a cloudpickle option — see
@@ -562,7 +532,7 @@ class Job:
             wrote = False
             with open(path, "w", encoding="utf-8") as f:
                 for k, v in it:
-                    f.write(json.dumps([k, v], separators=(",", ":"), ensure_ascii=False))
+                    f.write(canonical_json([k, v]))
                     f.write("\n")
                     wrote = True
             if wrote:

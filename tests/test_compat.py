@@ -10,7 +10,7 @@ import shutil
 
 import pytest
 
-from map_reduce_ruby_spark.core import HashPartitioner, InvalidChunkLimit, Mapper, Reducer
+from map_reduce_ruby_spark.core import HashPartitioner, InvalidChunkLimit, Job, Mapper, Reducer
 
 
 def _word_count():
@@ -351,19 +351,20 @@ def test_memory_limit_bounds_buffer_and_spills_reference_chunks(spark):
 
 
 def test_memory_limit_output_byte_identical_with_reduce(spark, tmp_path):
-    """Partition files from the spill path hash-identical to the unbounded
-    path's (the VERDICT r7 'done' criterion)."""
+    """Partition files from a multi-spill Mapper are byte-identical to one
+    Job.shuffle_to_files over the same inputs, with no spill at all."""
     texts = [f"alpha beta w{i % 13} w{i % 5} gamma" for i in range(120)]
+    impl = _word_count()
 
-    bounded = Mapper(_word_count(), spark, partitioner=HashPartitioner(8),
+    bounded = Mapper(impl, spark, partitioner=HashPartitioner(8),
                      memory_limit=300)
-    unbounded = Mapper(_word_count(), spark, partitioner=HashPartitioner(8))
     for t in texts:
         bounded.map(t)
-        unbounded.map(t)
     assert len(bounded._spill_chunks) >= 2
     pb = _read_part_bytes(bounded.shuffle(out_dir=str(tmp_path / "b")))
-    pu = _read_part_bytes(unbounded.shuffle(out_dir=str(tmp_path / "u")))
+    job = Job(map_fn=impl.map, reduce_fn=impl.reduce,
+              partitioner=HashPartitioner(8), num_partitions=8)
+    pu = _read_part_bytes(job.shuffle_to_files(spark, texts, str(tmp_path / "u")))
     assert pb == pu
 
 
@@ -380,15 +381,17 @@ def test_memory_limit_output_byte_identical_no_reduce_fifo(spark, tmp_path):
 
         return Dups()
 
-    bounded = Mapper(_impl(), spark, partitioner=lambda k: 0,
+    impl = _impl()
+    bounded = Mapper(impl, spark, partitioner=lambda k: 0,
                      memory_limit=120)
-    unbounded = Mapper(_impl(), spark, partitioner=lambda k: 0)
     for i in range(40):
         bounded.map(i)
-        unbounded.map(i)
     assert len(bounded._spill_chunks) >= 3
     [pb] = _read_part_bytes(bounded.shuffle(out_dir=str(tmp_path / "b"))).values()
-    [pu] = _read_part_bytes(unbounded.shuffle(out_dir=str(tmp_path / "u"))).values()
+    job = Job(map_fn=impl.map, partitioner=lambda k: 0)
+    [pu] = _read_part_bytes(
+        job.shuffle_to_files(spark, range(40), str(tmp_path / "u"), stable=True)
+    ).values()
     assert pb == pu
     dup_vals = [json.loads(l)[1] for l in pb.decode().splitlines()
                 if json.loads(l)[0] == "dup"]
@@ -446,8 +449,10 @@ def test_memory_limit_threaded_ingest_is_lossless(spark, tmp_path):
 def test_shuffle_consumes_mapper_state_both_paths(spark, tmp_path):
     """A second shuffle on the same mapper yields EMPTY partitions — the
     reference's shuffle deletes its chunks and the buffer was already
-    flushed (mapper.rb:81,88-93), so the state is consumed, not replayed."""
-    for ml in (None, 64):
+    flushed (mapper.rb:81,88-93), so the state is consumed, not replayed.
+    Both with no spill before shuffle (the default limit) and with spills
+    during map()."""
+    for ml in (16 * 1024 * 1024, 64):
         mapper = Mapper(_word_count(), spark, partitioner=lambda k: 0,
                         memory_limit=ml)
         mapper.map("a b a")
@@ -483,3 +488,67 @@ def test_memory_limit_spill_raises_on_incomparable_keys(spark):
     with pytest.raises(IncomparableKeyError):
         for i in range(10):  # the first over-limit map() call spills
             mapper.map(i)
+
+
+def test_mapper_runs_map_at_map_time(spark):
+    """The reference's Mapper#map runs the implementation's map at once
+    (mapper.rb:43-54): its error surfaces from map(), not from shuffle()."""
+
+    class Failing:
+        def map(self, text):
+            raise ValueError(f"bad input {text!r}")
+
+    mapper = Mapper(Failing(), spark)
+    with pytest.raises(ValueError, match="bad input 'x'"):
+        mapper.map("x")
+
+
+def test_fold_receives_its_key_on_every_path(spark, tmp_path):
+    """The reference's fold is reduce(key, v1, v2) on every path
+    (README.md:42-50). A fold that uses its key gives the reference model's
+    answer through Job.run, Job.run_arrow, Job.reduce_files and the
+    Mapper -> Reducer flow, whether the Mapper spills every pair or never
+    spills before shuffle."""
+
+    class KeyedCount:
+        def map(self, text):
+            for w in text.split():
+                yield w, 1
+
+        def reduce(self, key, a, b):
+            return a + b + len(key)
+
+    texts = ["a a b", "a", "bb cc bb", "ccc a bb", "b"]
+    impl = KeyedCount()
+    # reference model: n pairs of a key need n - 1 folds, each adding len(key)
+    words = [w for t in texts for w in t.split()]
+    expected = {w: words.count(w) + (words.count(w) - 1) * len(w) for w in set(words)}
+
+    job = Job(map_fn=impl.map, reduce_fn=impl.reduce, num_partitions=2)
+    assert dict(job.run(spark, texts).collect()) == expected
+
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    arrow = {json.loads(r.k): json.loads(r.v) for r in job.run_arrow(spark, df).collect()}
+    assert arrow == expected
+
+    chunk_paths = []
+    for i, t in enumerate(texts):
+        path = tmp_path / f"chunk{i}.jsonl"
+        path.write_text("".join(json.dumps([w, 1]) + "\n" for w in t.split()))
+        chunk_paths.append(str(path))
+    files = Job.reduce_files(spark, chunk_paths, impl.reduce, num_partitions=2)
+    assert dict(files.collect()) == expected
+
+    for ml in (1, 16 * 1024 * 1024):
+        reducer = Reducer(impl, spark)
+        # two workers, so equal keys also meet in the reducer
+        for w, worker_texts in enumerate((texts[:2], texts[2:])):
+            mapper = Mapper(impl, spark, partitioner=HashPartitioner(2), memory_limit=ml)
+            for t in worker_texts:
+                mapper.map(t)
+            n_pairs = len(" ".join(worker_texts).split())
+            assert len(mapper._spill_chunks) == (n_pairs if ml == 1 else 0)
+            parts = mapper.shuffle(out_dir=str(tmp_path / f"m{ml}_{w}"))
+            for path in parts.values():
+                shutil.copyfile(path, reducer.add_chunk())
+        assert dict(reducer.reduce()) == expected, f"memory_limit={ml}"

@@ -145,3 +145,25 @@ def test_custom_fold_sees_null_as_none(spark):
 
     (row,) = reduce_by_key(df, ["k"], {"v": fold}).collect()
     assert row.v == 103.0
+
+
+def test_mixed_call_primitive_types_equal_fast_path_schema(spark):
+    df = spark.createDataFrame(
+        [("a", 1, 1.5, "x", 1), ("a", 2, 2.5, "y", 2), ("b", None, None, None, 3)],
+        "k string, i int, d double, s string, v long",
+    )
+    prims = {f"{c}_{f}": f for c in ("i", "d", "s") for f in ("sum", "min", "max", "count", "any")}
+    df = df.select("k", "v", *[F.col(c.split("_")[0]).alias(c) for c in prims])
+    fast = reduce_by_key(df, ["k"], prims).schema
+    mixed = reduce_by_key(df, ["k"], {**prims, "v": lambda k, a, b: a + b}).schema
+    assert [f for f in mixed.fields if f.name != "v"] == fast.fields
+    assert mixed["i_sum"].dataType.simpleString() == "bigint"
+
+
+def test_count_of_string_column_runs_beside_a_custom_fold(spark):
+    df = spark.createDataFrame(
+        [("a", "x", 1), ("a", None, 2), ("a", "y", 3), ("b", "z", 4)], "k string, s string, v long"
+    )
+    out = reduce_by_key(df, ["k"], {"s": "count", "v": lambda k, a, b: a + b})
+    assert out.schema["s"].dataType.simpleString() == "bigint"
+    assert sorted((r.k, r.s, r.v) for r in out.collect()) == [("a", 2, 6), ("b", 1, 4)]

@@ -118,7 +118,7 @@ class TestMultiChunkReduce:
             reduce_fn=lambda key, a, b: a + b + len(key),
             num_partitions=2,
         )
-        result = dict(job.run_with_key_in_reduce(spark, inputs).collect())
+        result = dict(job.run(spark, inputs).collect())
         assert result == {"a": 4, "bb": 9}
 
 
@@ -153,14 +153,14 @@ class TestEmptyInput:
 
 class TestEnumeratorForm:
     # Reducer#reduce without a block returns a lazy Enumerator
-    # (reference lib/map_reduce/reducer.rb:70) == toLocalIterator.
+    # (reference lib/map_reduce/reducer.rb:70) == run(...).toLocalIterator().
     def test_to_local_iterator(self, spark):
         job = Job(
             map_fn=lambda t: ((w, 1) for w in t.split()),
             reduce_fn=lambda k, a, b: a + b,
             num_partitions=2,
         )
-        it = job.to_local_iterator(spark, ["x y", "y z"])
+        it = job.run(spark, ["x y", "y z"]).toLocalIterator()
         assert dict(it) == {"x": 1, "y": 2, "z": 1}
 
 

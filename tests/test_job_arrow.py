@@ -86,14 +86,17 @@ def test_run_arrow_partition_index_equals_partitioner(spark, sf_dir):
         assert part(json.loads(r.k)) == r.pid
 
 
-def test_run_arrow_partial_combine_flush_is_lossless(spark, sf_dir):
-    """A tiny combine_flush forces many partial map-side combines; the
+def test_run_arrow_partial_combine_flush_is_lossless(spark, sf_dir, monkeypatch):
+    """A tiny COMBINE_FLUSH forces many partial map-side combines; the
     post-shuffle refold must still produce exact totals (the associative+
     commutative contract)."""
+    from map_reduce_ruby_spark.core import job as job_module
+
     job = Job(map_fn=_map_wc, reduce_fn=_fold, num_partitions=16)
     docs = _docs(spark, sf_dir)
     full = _collect_kv(job.run_arrow(spark, docs))
-    flushed = _collect_kv(job.run_arrow(spark, docs, combine_flush=3))
+    monkeypatch.setattr(job_module, "COMBINE_FLUSH", 3)
+    flushed = _collect_kv(job.run_arrow(spark, docs))
     assert flushed == full
 
 
