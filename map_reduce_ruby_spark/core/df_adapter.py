@@ -41,9 +41,25 @@ _PRIMITIVES: dict[str, Callable[[str], F.Column]] = {
 }
 
 
+# min/max as Spark ranks floats, NaN above every number (arrow's skip NaN)
+def _min(col: pa.Array) -> pa.Scalar:
+    if pa.types.is_floating(col.type):
+        nan = pc.fill_null(pc.is_nan(col), False)
+        if pc.any(nan).as_py():
+            numbers = col.filter(pc.invert(nan))
+            return pc.min(numbers) if pc.count(numbers).as_py() else pa.scalar(float("nan"), col.type)
+    return pc.min(col)
+
+
+def _max(col: pa.Array) -> pa.Scalar:
+    if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py():
+        return pa.scalar(float("nan"), col.type)
+    return pc.max(col)
+
+
 # the primitives on the general path, per batch; count's partials merge by sum
 _ARROW_PRIMITIVES: dict[str, Callable[[pa.Array], pa.Scalar]] = {
-    "sum": pc.sum, "min": pc.min, "max": pc.max, "count": pc.count, "any": lambda col: col[0],
+    "sum": pc.sum, "min": _min, "max": _max, "count": pc.count, "any": lambda col: col[0],
 }
 
 

@@ -11,6 +11,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def python_worker_confs(master: str) -> dict[str, str]:
+    """Confs that start local Python workers from ``_worker_daemon``.
+
+    The package's parent goes on the workers' PYTHONPATH, so they import the
+    daemon from any cwd. Other masters keep the stock daemon: there,
+    ``--py-files`` lands only after the daemon starts.
+    """
+    if not master.startswith("local"):
+        return {}
+    return {
+        "spark.python.daemon.module": "map_reduce_ruby_spark._worker_daemon",
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+    }
+
 
 def get_spark(
     app_name: str = "map_reduce_ruby_spark",
@@ -22,7 +39,9 @@ def get_spark(
     Defaults: ``local[$SPARK_GRAFT_CPUS]`` (falls back to ``local[*]``),
     shuffle partitions = cores (not the 200 default, which over-parallelizes
     local data and under-parallelizes 100 TB — on a real cluster set it to
-    ~2-3x total executor cores or let AQE coalesce).
+    ~2-3x total executor cores or let AQE coalesce). Local masters run
+    Python tasks under ``_worker_daemon``, which skips re-reading unchanged
+    zip archives before each task (``python_worker_confs``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -110,6 +129,8 @@ def get_spark(
             "-XX:GCLockerRetryAllocationCount=64",
         )
     )
+    for key, value in python_worker_confs(master).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

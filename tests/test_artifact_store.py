@@ -149,7 +149,15 @@ def test_append_lock_steals_only_a_dead_writers_lock(tmp_path, monkeypatch):
 
 
 class _Session:
-    """Stands in for a SparkSession: weak-referenceable, identity-hashed."""
+    """Stands in for a SparkSession: weak-referenceable, identity-hashed.
+
+    The slots make an instance too big for pymalloc (over 512 bytes), so a
+    freed one goes to the C allocator's per-thread cache, and the next
+    instance gets its address back whatever the process allocated before;
+    pymalloc hands a small freed block out only after an unbounded number
+    of free blocks ahead of it."""
+
+    __slots__ = ("__weakref__", *(f"_pad{i}" for i in range(80)))
 
 
 def test_attach_memo_is_session_safe(tmp_path):
@@ -183,9 +191,7 @@ def test_attach_memo_is_session_safe(tmp_path):
     del first_session
     gc.collect()
     assert dropped() is None, "the memo key kept a dropped session alive"
-    # a new session that lands on the dead one's address still misses; the
-    # allocator hands that address out only after the free blocks of the
-    # same size ahead of it, and a long test process has over a thousand
+    # a new session that lands on the dead one's address still misses
     spares, reused = [], None
     while reused is None and len(spares) < 100_000:
         spares.append(_Session())

@@ -167,3 +167,23 @@ def test_count_of_string_column_runs_beside_a_custom_fold(spark):
     out = reduce_by_key(df, ["k"], {"s": "count", "v": lambda k, a, b: a + b})
     assert out.schema["s"].dataType.simpleString() == "bigint"
     assert sorted((r.k, r.s, r.v) for r in out.collect()) == [("a", 2, 6), ("b", 1, 4)]
+
+
+def test_min_max_rank_nan_as_spark_on_both_paths(spark):
+    nan = float("nan")
+    rows = [("a", 1.5), ("a", nan), ("b", nan), ("b", nan), ("c", nan), ("c", None),
+            ("d", -1.0), ("d", 2.0), ("e", None), ("f", float("inf")), ("f", nan)]
+    df = spark.createDataFrame(rows, "k string, d double").select(
+        "k", F.col("d").alias("lo"), F.col("d").alias("hi"), F.lit(1).alias("n"))
+    prims = {"lo": "min", "hi": "max"}
+
+    def groups(out):
+        # repr: NaN equals NaN
+        return {r.k: (repr(r.lo), repr(r.hi)) for r in out.collect()}
+
+    fast = groups(reduce_by_key(df, ["k"], prims))
+    with _arrow_batch_rows(spark, 1):
+        mixed = groups(reduce_by_key(df.repartition(3), ["k"], {**prims, "n": lambda k, a, b: a + b}))
+    assert mixed == fast
+    assert fast == {"a": ("1.5", "nan"), "b": ("nan", "nan"), "c": ("nan", "nan"),
+                    "d": ("-1.0", "2.0"), "e": ("None", "None"), "f": ("inf", "nan")}
