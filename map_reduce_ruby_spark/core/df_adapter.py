@@ -47,7 +47,9 @@ def _min(col: pa.Array) -> pa.Scalar:
         nan = pc.fill_null(pc.is_nan(col), False)
         if pc.any(nan).as_py():
             numbers = col.filter(pc.invert(nan))
-            return pc.min(numbers) if pc.count(numbers).as_py() else pa.scalar(float("nan"), col.type)
+            if not pc.count(numbers).as_py():
+                return pa.scalar(float("nan"), col.type)
+            return pc.min(numbers)
     return pc.min(col)
 
 

@@ -11,9 +11,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
 def python_worker_confs(master: str) -> dict[str, str]:
     """Confs that start local Python workers from ``_worker_daemon``.
 
@@ -25,7 +22,7 @@ def python_worker_confs(master: str) -> dict[str, str]:
         return {}
     return {
         "spark.python.daemon.module": "map_reduce_ruby_spark._worker_daemon",
-        "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     }
 
 
@@ -129,8 +126,6 @@ def get_spark(
             "-XX:GCLockerRetryAllocationCount=64",
         )
     )
-    for key, value in python_worker_confs(master).items():
-        builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    spark = builder.config(map=python_worker_confs(master)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
