@@ -83,6 +83,18 @@ def _normalize(x: Any) -> Any:
     return x  # Python guarantees hash(1) == hash(1.0) for equal values
 
 
+def _native(a: Any, b: Any) -> bool:
+    """Both keys exactly ``str``, or both exactly ``int``/``float``: then
+    Python's own ``<`` and ``==`` agree with ``ruby_cmp`` and ``_normalize``
+    (UTF-8 byte order is code-point order, so Ruby's bytewise string order
+    is Python's). Exact type checks keep ``bool`` and every other pair on
+    the general path, which raises where the reference raises."""
+    ta, tb = type(a), type(b)
+    if ta is str:
+        return tb is str
+    return (ta is int or ta is float) and (tb is int or tb is float)
+
+
 @total_ordering
 class SortKey:
     """Total-order wrapper used as the RDD sort/group key.
@@ -90,6 +102,8 @@ class SortKey:
     Comparisons funnel through ruby_cmp and therefore raise
     IncomparableKeyError exactly where the reference raises ArgumentError —
     lazily, at the first comparison of an illegal pair (SURVEY.md §7.4.5).
+    Scalar pairs of one kind compare natively (``_native``): spill sorts and
+    merges compare keys at every step.
     """
 
     __slots__ = ("key",)
@@ -98,19 +112,28 @@ class SortKey:
         self.key = key
 
     def __lt__(self, other: "SortKey") -> bool:
-        return ruby_cmp(self.key, other.key) < 0
+        a, b = self.key, other.key
+        if _native(a, b):
+            return a < b
+        return ruby_cmp(a, b) < 0
 
     def __eq__(self, other: object) -> bool:
         if not isinstance(other, SortKey):
             return NotImplemented
+        a, b = self.key, other.key
+        if _native(a, b):
+            return a == b
         # Equality is used by shuffle grouping and must stay total (no raise):
         # normalized-form equality matches Ruby == (1 == 1.0, element-wise
         # arrays, distinct types simply unequal). Ordering (__lt__) is where
         # incomparable pairs raise, same as the reference's merge path.
-        return _normalize(self.key) == _normalize(other.key)
+        return _normalize(a) == _normalize(b)
 
     def __hash__(self) -> int:
-        return hash(_normalize(self.key))
+        key = self.key
+        if type(key) in (str, int, float):
+            return hash(key)
+        return hash(_normalize(key))
 
     def __repr__(self) -> str:
         return f"SortKey({self.key!r})"

@@ -83,8 +83,10 @@ def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     "not an anti-pattern; the sample keeps it worker-sized at every SF. "
     "The tiny memory_limit forces multiple spills of sorted, "
     "pre-combined reference-format chunk files (reference "
-    "mapper.rb:50-52,123-141), shuffle merges the chunks THROUGH Spark, "
-    "and the partition files are read back and checked against a plain "
+    "mapper.rb:50-52,123-141), shuffle k-way merges the chunks "
+    "in-process with chunk_limit as the fan-in, as the reference worker "
+    "does (no Spark job), and the partition files are read back and "
+    "checked against a plain "
     "SQL wordcount over the same sample. Complements mr_wordcount "
     "(Arrow engine path) with the porting path's memory discipline.",
     tags=("mapreduce", "compat", "core"),

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 
 import pytest
 
@@ -552,3 +553,184 @@ def test_fold_receives_its_key_on_every_path(spark, tmp_path):
             for path in parts.values():
                 shutil.copyfile(path, reducer.add_chunk())
         assert dict(reducer.reduce()) == expected, f"memory_limit={ml}"
+
+
+# ------------------------------------------- in-process merge (chunk_limit)
+
+
+@pytest.fixture
+def merge_temps(tmp_path, monkeypatch):
+    """Give the façade a private temp dir and record every cascade temp file
+    (``mr_merge_*``) its merges create."""
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmpdir))
+    made: list[str] = []
+    real_mkstemp = tempfile.mkstemp
+
+    def mkstemp(*args, **kwargs):
+        fd, path = real_mkstemp(*args, **kwargs)
+        if os.path.basename(path).startswith("mr_merge_"):
+            made.append(path)
+        return fd, path
+
+    monkeypatch.setattr(tempfile, "mkstemp", mkstemp)
+    return tmpdir, made
+
+
+def _reference_cascades(runs: int, chunk_limit: int) -> int:
+    """Temp files the reference's multi-run loop writes (reducer.rb:75-93,
+    mergeable.rb:31-46): while more than chunk_limit files wait, shift
+    chunk_limit of them off the queue and push one merged file back."""
+    queue, made = list(range(runs)), 0
+    while len(queue) > chunk_limit:
+        queue = queue[chunk_limit:] + ["merged"]
+        made += 1
+    return made
+
+
+def _write_chunks(reducer, chunks):
+    for pairs in chunks:
+        with open(reducer.add_chunk(), "w") as f:
+            f.writelines(json.dumps(p) + "\n" for p in pairs)
+
+
+def test_reducer_multi_run_reduce_with_chunk_limit_2(spark, merge_temps):
+    """reducer_spec.rb:99-138: three chunks reduced at chunk_limit 2 give
+    the right sums through one cascade, and no chunk or merge temp file is
+    left afterwards."""
+    tmpdir, made = merge_temps
+    reducer = Reducer(_word_count(), spark)
+    _write_chunks(reducer, [
+        [["key1", 1], ["key2", 2], ["key3", 3]],
+        [["key1", 4], ["key3", 5], ["key4", 6]],
+        [["key2", 7], ["key3", 8], ["key5", 9]],
+    ])
+    assert list(reducer.reduce(chunk_limit=2)) == [
+        ("key1", 5), ("key2", 9), ("key3", 16), ("key4", 6), ("key5", 9),
+    ]
+    assert len(made) == 1
+    assert os.listdir(tmpdir) == []
+
+
+def test_k_way_merge_order_under_cascade(merge_temps):
+    """mergeable_spec.rb:8-43: three sorted files with duplicate keys merge
+    into one key-sorted stream at chunk_limit 2, duplicates in file order;
+    and :45-60, one file streams through unchanged with no temp file."""
+    from map_reduce_ruby_spark.core.compat import _merge, _pair_item, _pair_line
+
+    tmpdir, made = merge_temps
+    files = [
+        [["a", 1], ["c", 1], ["e", 1]],
+        [["a", 2], ["b", 2], ["e", 2]],
+        [["b", 3], ["c", 3], ["d", 3]],
+    ]
+    runs = []
+    for i, pairs in enumerate(files):
+        path = tmpdir / f"run{i}.jsonl"
+        path.write_text("".join(json.dumps(p) + "\n" for p in pairs))
+        runs.append((str(path), 0, None))
+
+    def merged(batch, temps):
+        return [[k, v] for _, k, v in _merge(batch, 2, None, _pair_item, _pair_line, temps)]
+
+    temps: list[str] = []
+    assert merged(runs, temps) == [
+        ["a", 1], ["a", 2], ["b", 2], ["b", 3], ["c", 1], ["c", 3],
+        ["d", 3], ["e", 1], ["e", 2],
+    ]
+    assert temps == made and len(made) == 1
+    assert merged(runs[:1], []) == files[0]
+    assert len(made) == 1
+
+
+@pytest.mark.parametrize("with_reduce", [True, False])
+def test_mapper_output_independent_of_chunk_limit(spark, tmp_path, merge_temps, with_reduce):
+    """A Mapper with at least five spills writes byte-identical partition
+    files at chunk_limit 2 (a cascade) and 32 (one merge). Duplicate keys
+    carry distinct values, so without reduce the bytes also pin their
+    input (FIFO) order through the cascade."""
+    _tmpdir, made = merge_temps
+
+    class Impl:
+        def map(self, i):
+            yield f"w{i % 7}", i
+            yield f"u{i}", i
+
+    if with_reduce:
+        Impl.reduce = lambda self, key, a, b: a + b
+
+    out = {}
+    for limit in (2, 32):
+        mapper = Mapper(Impl(), spark, partitioner=HashPartitioner(3), memory_limit=200)
+        for i in range(60):
+            mapper.map(i)
+        spills = len(mapper._spill_chunks) + bool(mapper._buffer)  # + the tail
+        assert 5 <= spills < 32
+        before = len(made)
+        out[limit] = _read_part_bytes(
+            mapper.shuffle(chunk_limit=limit, out_dir=str(tmp_path / f"l{limit}"))
+        )
+        assert len(made) - before == _reference_cascades(spills, limit)
+    assert out[2] == out[32]
+    pairs = [json.loads(line) for data in out[2].values() for line in data.splitlines()]
+    for w in range(7):
+        values = [v for k, v in pairs if k == f"w{w}"]
+        inputs = list(range(w, 60, 7))
+        assert values == ([sum(inputs)] if with_reduce else inputs)
+
+
+@pytest.mark.parametrize("runs,chunk_limit", [(5, 2), (7, 3), (33, 32), (4, 4)])
+def test_cascade_count_matches_reference_loop(spark, merge_temps, runs, chunk_limit):
+    """As many cascade temp files as the reference loop writes: 5 runs at
+    chunk_limit 2 take 3."""
+    _tmpdir, made = merge_temps
+    assert _reference_cascades(5, 2) == 3
+    reducer = Reducer(_word_count(), spark)
+    _write_chunks(reducer, [[[f"k{i}", 1], ["shared", 1]] for i in range(runs)])
+    result = dict(reducer.reduce(chunk_limit=chunk_limit))
+    assert result == {"shared": runs, **{f"k{i}": 1 for i in range(runs)}}
+    assert len(made) == _reference_cascades(runs, chunk_limit)
+
+
+def test_reducer_incomparable_keys_across_chunks_raise_and_clean(spark, merge_temps):
+    """Keys with no Ruby order, in two different chunks, raise
+    IncomparableKeyError from reduce() itself (here inside a cascade), and
+    every chunk and merge temp file is still deleted."""
+    from map_reduce_ruby_spark.core.keys import IncomparableKeyError
+
+    tmpdir, made = merge_temps
+    reducer = Reducer(_word_count(), spark)
+    _write_chunks(reducer, [[["a", 1]], [[1, 1]], [["b", 1]]])
+    with pytest.raises(IncomparableKeyError):
+        list(reducer.reduce(chunk_limit=2))
+    assert made, "the error must come from the cascade merge"
+    assert os.listdir(tmpdir) == []
+
+
+def test_shuffle_and_reduce_fire_no_spark_job(spark, tmp_path):
+    """The façade merges in-process: Mapper.shuffle and Reducer.reduce run
+    no Spark job. A control job in the same job group proves that the
+    group's jobs are counted."""
+    import time
+
+    sc = spark.sparkContext
+    group = f"compat-no-jobs-{os.getpid()}"
+    sc.setJobGroup(group, "compat merge")
+    try:
+        mapper = Mapper(_word_count(), spark, partitioner=HashPartitioner(2), memory_limit=64)
+        for i in range(20):
+            mapper.map(f"w{i % 3} x{i}")
+        parts = mapper.shuffle(out_dir=str(tmp_path / "s"))
+        reducer = Reducer(_word_count(), spark)
+        for path in parts.values():
+            shutil.copyfile(path, reducer.add_chunk())
+        assert dict(reducer.reduce())["w0"] == 7
+        sc.parallelize([1]).count()  # the control job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 10
+    while not sc.statusTracker().getJobIdsForGroup(group) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -15,6 +16,7 @@ from map_reduce_ruby_spark.core import (
     canonical_json,
     ruby_cmp,
 )
+from map_reduce_ruby_spark.core.keys import IncomparableKeyError, _normalize
 
 # Legal key domain (reference README.md:122-140): strings, numbers, and
 # nested arrays of those. Finite floats only (NaN breaks every ordering).
@@ -72,3 +74,45 @@ def test_partitioners_in_range_and_deterministic(k, n):
         p = P(n)
         assert 0 <= p(k) < n
         assert p(k) == p(k)
+
+
+# Scalars of every kind, bools included (illegal keys), and nested arrays:
+# SortKey's native scalar comparisons must agree with ruby_cmp/_normalize.
+any_scalar = st.one_of(
+    st.text(max_size=8),  # non-ASCII included
+    st.integers(min_value=-(10**20), max_value=10**20),
+    st.floats(allow_nan=False),
+    st.booleans(),
+)
+any_key = st.recursive(any_scalar, lambda c: st.lists(c, max_size=3), max_leaves=6)
+key_pairs = st.one_of(
+    st.tuples(st.text(max_size=8), st.text(max_size=8)),
+    st.tuples(st.integers(), st.integers()),
+    st.tuples(st.floats(allow_nan=False), st.floats(allow_nan=False)),
+    st.tuples(num, num),
+    st.tuples(st.booleans(), any_scalar),
+    st.tuples(any_key, any_key),
+)
+
+
+@given(key_pairs)
+@settings(max_examples=400, deadline=None)
+def test_sortkey_agrees_with_ruby_cmp_and_normalize(pair):
+    a, b = pair
+    ka, kb = SortKey(a), SortKey(b)
+    assert (ka == kb) == (_normalize(a) == _normalize(b))
+    assert hash(ka) == hash(_normalize(a))
+    try:
+        c = ruby_cmp(a, b)
+    except IncomparableKeyError:
+        with pytest.raises(IncomparableKeyError):
+            ka < kb
+        return
+    assert (ka < kb) == (c < 0)
+    assert (ka == kb) == (c == 0)
+
+
+def test_sortkey_bools_and_mixed_types_still_raise():
+    for a, b in ((True, False), (True, 1), (1.0, False), ("a", 1), (1, "a"), ("a", ["a"])):
+        with pytest.raises(IncomparableKeyError):
+            SortKey(a) < SortKey(b)
