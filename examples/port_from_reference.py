@@ -100,7 +100,7 @@ def port_3_shared_storage(spark) -> dict:
         num_partitions=4,
     )
     gen_dir = os.path.join(tempfile.mkdtemp(), "gen0")
-    partitions = job.shuffle_to_files(spark, TEXTS, gen_dir, shared_storage=True)
+    partitions = job.shuffle_to_files(spark, TEXTS, gen_dir)
     reduced = Job.reduce_files(spark, sorted(partitions.values()), lambda k, a, b: a + b)
     return dict(reduced.collect())
 
@@ -126,9 +126,7 @@ def port_4_object_store(spark) -> dict:
         reduce_fn=lambda key, a, b: a + b,
         num_partitions=4,
     )
-    pmap = job.shuffle_to_files(
-        spark, TEXTS, "demo://bucket/wordcount/gen0", shared_storage=True
-    )
+    pmap = job.shuffle_to_files(spark, TEXTS, "demo://bucket/wordcount/gen0")
     # "download" = resolve each URI through the backend, reference-style
     local = [os.path.join(root, uri[len("demo://"):]) for uri in pmap.values()]
     reduced = Job.reduce_files(spark, sorted(local), lambda k, a, b: a + b)
@@ -162,9 +160,7 @@ def port_5_s3(spark) -> dict:
         num_partitions=4,
     )
     # mappers "upload to S3": executor tasks publish chunks via the backend
-    pmap = job.shuffle_to_files(
-        spark, TEXTS, "s3://bucket/wordcount/gen0", shared_storage=True
-    )
+    pmap = job.shuffle_to_files(spark, TEXTS, "s3://bucket/wordcount/gen0")
     # reducers "download from S3": resolve each chunk URI through the backend
     store = S3Storage(client_factory=functools.partial(S3FileClientDouble, root))
     dl_dir = tempfile.mkdtemp()

@@ -2,9 +2,11 @@
 data-processing capabilities of mrkamel/map-reduce-ruby (reference read-only at
 /root/reference/).
 
-Architecture (SURVEY.md §7): the reference's spill/merge/heap machinery is NOT
-reimplemented — Spark's sort-based shuffle already is that machinery. What this
-package provides is:
+Architecture (SURVEY.md §7): on the distributed paths (``Job``, the DataFrame
+adapter) the reference's spill/merge/heap machinery is Spark's sort-based
+shuffle. Only the single-worker ``compat.Mapper``/``Reducer`` façade spills
+and k-way merges sorted chunk files itself, with ``chunk_limit`` as the merge
+fan-in, as the reference's worker does. What this package provides is:
 
 - ``core``      — the faithful semantic layer: the map/reduce user protocol,
                   Ruby-comparable key ordering (raise on incomparable), canonical

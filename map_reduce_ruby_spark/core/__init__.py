@@ -6,10 +6,13 @@ comparability (raise on incomparable), canonical-JSON key encoding, SHA1
 hash-partition placement, combiner optionality, duplicate-preserving
 sorted-within-partition output, JSON-lines chunk interop.
 
-What is delegated to Spark (never reimplemented): memory-bounded buffering,
-sorted spill files, k-way merge, bounded fan-in, temp-file lifecycle — all of
-reference lib/map_reduce/{mapper,reducer,mergeable,priority_queue,temp_path}.rb's
-mechanics are Spark's sort-based shuffle.
+Where the spill/merge mechanics live: on ``Job`` and ``df_adapter``,
+memory-bounded buffering, sorted spill files, k-way merge, bounded fan-in and
+the temp-file lifecycle are Spark's sort-based shuffle. The single-worker
+``compat.Mapper``/``Reducer`` reimplement them in-process — a bounded buffer,
+sorted spill chunks, a FIFO-stable k-way merge with ``chunk_limit`` as the
+fan-in, cascades through temp files — as reference
+lib/map_reduce/{mapper,reducer,mergeable,priority_queue,temp_path}.rb do.
 """
 
 from map_reduce_ruby_spark.core.keys import (

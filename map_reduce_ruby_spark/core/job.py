@@ -10,7 +10,9 @@ Reference surface being re-expressed (SURVEY.md §2.1):
 - O15 key-sorted output within each partition          -> external sort within partitions
 - O16 no-reduce passthrough (duplicates preserved)     -> ``repartitionAndSortWithinPartitions``
 - O2/O7-O11/O17 (spill, k-way merge, fan-in caps, temp files) are intentionally
-  NOT here: that machinery *is* Spark's sort-based shuffle (SURVEY.md §4).
+  NOT here: on this distributed path that machinery *is* Spark's sort-based
+  shuffle (SURVEY.md §4). The single-worker ``compat.Mapper``/``Reducer``
+  implement it in-process instead.
 
 Contract notes carried over verbatim from the reference:
 - ``reduce(key, v1, v2)`` must be associative + commutative; it is applied in
@@ -26,15 +28,19 @@ Contract notes carried over verbatim from the reference:
 from __future__ import annotations
 
 import json
-import os
-from typing import Any, Callable, Iterable, Iterator
+from typing import Any, Callable, Iterable
 
 from pyspark import RDD, SparkContext
 from pyspark.sql import SparkSession
 
 from map_reduce_ruby_spark.core.keys import SortKey, canonical_json
 from map_reduce_ruby_spark.core.partitioner import HashPartitioner, PartitionFn
-from map_reduce_ruby_spark.sources.chunk_datasource import MANIFEST_NAME
+from map_reduce_ruby_spark.sources.chunk_datasource import (
+    CHUNK_SCHEMA,
+    MANIFEST_NAME,
+    register_chunk_source,
+)
+from map_reduce_ruby_spark.sources.storage import join_uri, pickle_backend, storage_for
 
 
 class MapReduceError(Exception):
@@ -42,9 +48,10 @@ class MapReduceError(Exception):
 
 
 class InvalidNumPartitions(MapReduceError):
-    """num_partitions must be >= 1 (analog of the reference's InvalidChunkLimit
-    guard, lib/map_reduce.rb:18 / mapper.rb:77 — chunk_limit itself dissolves:
-    Spark manages merge fan-in internally)."""
+    """num_partitions must be >= 1 (the Job's analog of the reference's
+    InvalidChunkLimit guard, lib/map_reduce.rb:18 / mapper.rb:77). Spark
+    manages the Job's merge fan-in; ``chunk_limit`` itself is the compat
+    Mapper/Reducer's fan-in and raises ``compat.InvalidChunkLimit``."""
 
 
 MapFn = Callable[[Any], Iterable[tuple[Any, Any]]]
@@ -409,7 +416,7 @@ class Job:
         spark: SparkSession,
         inputs: Any,
         out_dir: str,
-        shared_storage: bool = False,
+        shared_storage: bool = True,
         stable: bool = False,
         via_arrow: bool = False,
     ) -> dict[int, str]:
@@ -419,44 +426,45 @@ class Job:
         ``json([key, value])``, keys sorted within the file
         (reference lib/map_reduce/mapper.rb:115,131-135 chunk format).
 
+        The sorted shuffle output is written through the ``mr_chunks``
+        DataSource writer (sources/chunk_datasource.py) — one
+        reference-format sorted run per partition, written by the executors
+        directly into ``out_dir``. ``out_dir`` may be a plain/``file://``
+        path (local disk or an NFS mount) or any URI whose scheme has a
+        registered backend (sources/storage.py — an s3 deployment registers
+        its client once). No row ever crosses the driver, and the
+        partition->path map is read from the writer's ``_MANIFEST.json`` —
+        built on the driver from the tasks' commit messages, never from a
+        directory listing — which is what makes the reference's S3 handoff
+        story (reference README.md:60-67,78-84) work end-to-end on a real
+        cluster. ``out_dir`` must not already hold a completed generation.
+
         ``stable=True`` (no-reduce mode): equal-key duplicates keep input
         order in the chunk files, matching the reference's FIFO-stable merge
         byte-for-byte (lib/map_reduce/priority_queue.rb:35,50-53, pinned by
         spec/map_reduce/mapper_spec.rb:89-125). Costs one ``zipWithIndex``
-        pass; the compat façade turns it on by default because it advertises
-        byte-compatible chunk files.
+        pass; leave it off unless byte-stable duplicate order is required.
 
-        Two modes:
+        ``via_arrow=True`` (a DataFrame input; incompatible with
+        ``stable``): the shuffle runs through ``run_arrow`` — Arrow
+        transport end-to-end, JVM Tungsten exchange, no Python-pickle leg —
+        and the writer receives already-canonical (k, v) JSON strings.
+        ``map_fn`` then sees ``run_arrow``'s plain row tuples and the fold
+        JSON-roundtripped values, which is why the path is chosen by the
+        caller and not by input type. Steered placement keeps partition
+        index == ``partitioner(key)``, so the manifest's partition ids and
+        each file's JSON-lines bytes are identical to the ``run`` path's
+        (pinned by tests/test_job_arrow.py).
 
-        - ``shared_storage=False`` (default, the compat-façade fast path):
-          each task writes ``partition-<pid>.jsonl`` where it runs. Correct
-          on a single node; on a real cluster the files land on
-          executor-local disks where driver-returned paths are meaningless.
-        - ``shared_storage=True`` (the cluster path): the sorted shuffle
-          output is written through the ``mr_chunks`` DataSource writer
-          (sources/chunk_datasource.py) — one reference-format sorted run
-          per partition, written by the executors directly into ``out_dir``
-          on shared storage. ``out_dir`` may be a plain/``file://`` path
-          (NFS mount) or any URI whose scheme has a registered backend
-          (sources/storage.py — an s3 deployment registers its client
-          once). No row ever crosses the driver, and the partition->path
-          map is read from the writer's ``_MANIFEST.json`` — built on the
-          driver from the tasks' commit messages, never from a directory
-          listing — which is what makes the reference's S3 handoff story
-          (reference README.md:60-67,78-84) work end-to-end on a real
-          cluster.
-
-        ``via_arrow=True`` (requires ``shared_storage`` and a DataFrame
-        input; incompatible with ``stable``): the shuffle runs through
-        ``run_arrow`` — Arrow transport end-to-end, JVM Tungsten exchange,
-        no Python-pickle leg — and the writer receives already-canonical
-        (k, v) JSON strings. Steered placement keeps partition index ==
-        ``partitioner(key)``, so the manifest's partition ids and each
-        file's JSON-lines bytes are identical to the classic path's
-        (pinned by tests/test_sources_sinks.py).
+        ``shared_storage`` is accepted only as ``True``: the executor-local
+        ``shared_storage=False`` writer was removed.
         """
-        if via_arrow and not shared_storage:
-            raise ValueError("via_arrow requires shared_storage=True")
+        if not shared_storage:
+            raise ValueError(
+                "shared_storage=False (the executor-local partition-file "
+                "writer) was removed; shuffle_to_files always publishes "
+                "through the mr_chunks writer"
+            )
         if via_arrow and stable:
             raise ValueError(
                 "via_arrow does not offer FIFO-stable duplicate order; "
@@ -465,82 +473,50 @@ class Job:
             )
         if via_arrow and not hasattr(inputs, "mapInArrow"):
             raise TypeError("via_arrow requires a DataFrame input")
-        if shared_storage:
-            from map_reduce_ruby_spark.sources.storage import join_uri, storage_for
-
-            backend = storage_for(out_dir)  # raises for unregistered schemes
-            manifest_uri = join_uri(out_dir, MANIFEST_NAME)
-            # COMPLETED generation only (manifest + _SUCCESS): a manifest
-            # without the marker is a crashed half-commit, and rewriting it
-            # is the recovery path (mirrors _ChunkWriter's plan-time guard).
-            if backend.exists(manifest_uri) and backend.exists(
-                join_uri(out_dir, "_SUCCESS")
-            ):
-                raise ValueError(
-                    f"{out_dir!r} already holds a completed chunk generation "
-                    f"({MANIFEST_NAME} + _SUCCESS present) — the append-mode "
-                    "writer would interleave generations and the path map "
-                    "would return stale chunks; write each shuffle to a "
-                    "fresh generation directory"
-                )
-        else:
-            os.makedirs(out_dir, exist_ok=True)
-
-        if shared_storage:
-            from map_reduce_ruby_spark.sources.chunk_datasource import (
-                CHUNK_SCHEMA,
-                register_chunk_source,
+        backend = storage_for(out_dir)  # raises for unregistered schemes
+        manifest_uri = join_uri(out_dir, MANIFEST_NAME)
+        # COMPLETED generation only (manifest + _SUCCESS): a manifest
+        # without the marker is a crashed half-commit, and rewriting it
+        # is the recovery path (mirrors _ChunkWriter's plan-time guard).
+        if backend.exists(manifest_uri) and backend.exists(join_uri(out_dir, "_SUCCESS")):
+            raise ValueError(
+                f"{out_dir!r} already holds a completed chunk generation "
+                f"({MANIFEST_NAME} + _SUCCESS present) — the append-mode "
+                "writer would interleave generations and the path map "
+                "would return stale chunks; write each shuffle to a "
+                "fresh generation directory"
             )
 
-            register_chunk_source(spark)
-            from map_reduce_ruby_spark.sources.storage import pickle_backend
-
-            if via_arrow:
-                # already canonical (k, v) JSON strings, key-sorted within
-                # partition, partition index == partitioner(key): feed the
-                # writer directly — no per-row Python canon pass at all
-                # (toDF renames to the writer's field names; narrow, no
-                # exchange)
-                kv_df = self.run_arrow(spark, inputs, sort_output=True).toDF(
-                    "key_json", "value_json"
-                )
-            else:
-                result = self.run(spark, inputs, sort_output=True, stable=stable)
-                # RDD -> (key_json, value_json) rows is a narrow map: partition
-                # ids and in-partition sort order carry through to the writer,
-                # which emits chunk-<pid>-<writeid>.jsonl per task
-                # (TaskContext.partitionId + the writer's generation token)
-                # and reports (partition, file, rows) in its commit message.
-                rows = result.map(lambda kv: (canonical_json(kv[0]), canonical_json(kv[1])))
-                kv_df = spark.createDataFrame(rows, CHUNK_SCHEMA)
-            # the backend resolved above (driver-side registry) rides to the
-            # writer's worker processes as a cloudpickle option — see
-            # sources/storage.py pickle_backend
-            kv_df.write.format("mr_chunks").mode("append").option(
-                "backend_pickle", pickle_backend(backend)
-            ).save(out_dir)
-            manifest = json.loads(backend.read_text(manifest_uri))
-            return {
-                int(e["partition"]): join_uri(out_dir, e["file"])
-                for e in manifest["files"]
-            }
-
-        result = self.run(spark, inputs, sort_output=True, stable=stable)
-
-        def write_partition(pid: int, it: Iterator[tuple[Any, Any]]) -> Iterator[tuple[int, str]]:
-            path = os.path.join(out_dir, f"partition-{pid}.jsonl")
-            wrote = False
-            with open(path, "w", encoding="utf-8") as f:
-                for k, v in it:
-                    f.write(canonical_json([k, v]))
-                    f.write("\n")
-                    wrote = True
-            if wrote:
-                yield (pid, path)
-            else:
-                os.unlink(path)
-
-        return dict(result.mapPartitionsWithIndex(write_partition).collect())
+        register_chunk_source(spark)
+        if via_arrow:
+            # already canonical (k, v) JSON strings, key-sorted within
+            # partition, partition index == partitioner(key): feed the
+            # writer directly — no per-row Python canon pass at all
+            # (toDF renames to the writer's field names; narrow, no
+            # exchange)
+            kv_df = self.run_arrow(spark, inputs, sort_output=True).toDF(
+                "key_json", "value_json"
+            )
+        else:
+            result = self.run(spark, inputs, sort_output=True, stable=stable)
+            # RDD -> (key_json, value_json) rows is a narrow map: partition
+            # ids and in-partition sort order carry through to the writer,
+            # which emits chunk-<pid>-<writeid>.jsonl per task
+            # (TaskContext.partitionId + the writer's generation token)
+            # and reports (partition, file, rows) in its commit message.
+            rows = result.map(lambda kv: (canonical_json(kv[0]), canonical_json(kv[1])))
+            kv_df = spark.createDataFrame(rows, CHUNK_SCHEMA)
+        # the backend resolved above (driver-side registry) rides to the
+        # writer's worker processes as a cloudpickle option — see
+        # sources/storage.py pickle_backend
+        kv_df.write.format("mr_chunks").mode("append").option(
+            "backend_pickle", pickle_backend(backend)
+        ).save(out_dir)
+        manifest = json.loads(backend.read_text(manifest_uri))
+        return {
+            int(e["partition"]): join_uri(out_dir, e["file"])
+            for e in manifest["files"]
+        }
 
     @classmethod
     def reduce_files(

@@ -33,18 +33,23 @@ Concurrent first-consumers are safe: block materialization goes through
 a partition, the rest wait and read (the ``connected_components_star`` /
 ``_bpe_learn`` fusion pattern relied on this before this module existed).
 
-Reliable-checkpoint caveat: with ``eager=False`` Spark writes the checkpoint
-files by re-running the RDD after the first consumer job finishes (the
-documented recompute-unless-persisted behavior), so the durable mode pays
-one extra computation per truncation site. That is the right trade on a
+Reliable-checkpoint caveat: Spark writes reliable checkpoint files in a
+job of their own that re-runs the RDD unless it is persisted (the
+documented recompute-unless-persisted behavior). So the durable mode
+persists the frame, checkpoints it EAGERLY (the ``eager`` argument is
+ignored there) and unpersists it once the files have landed: each site
+computes its rows once, and the file-writing job reads the cached blocks.
+The eager action is one more job per site than a lazy checkpoint would
+run. That is the right trade on a
 cluster (the sites guard hours-long fixpoint loops); latency-critical local
-runs keep localCheckpoint.
+runs keep the lazy, zero-IO localCheckpoint.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
@@ -54,7 +59,8 @@ def truncate(df: DataFrame, eager: bool = False) -> DataFrame:
     """Checkpoint ``df`` to truncate its lineage.
 
     Uses reliable ``checkpoint()`` when ``$SPARK_GRAFT_CHECKPOINT_DIR`` is
-    set (cluster mode — survives executor loss), else ``localCheckpoint()``.
+    set (cluster mode — survives executor loss; always eager, computed
+    once through a transient persist), else ``localCheckpoint()``.
     ``eager=False`` (default) fuses materialization into the first consumer
     job; pass ``eager=True`` only when the caller needs the action to run
     now (Observation metrics, detaching from a directory about to vanish).
@@ -64,5 +70,11 @@ def truncate(df: DataFrame, eager: bool = False) -> DataFrame:
         sc = df.sparkSession.sparkContext
         if not sc.getCheckpointDir():
             sc.setCheckpointDir(ckdir)
-        return df.checkpoint(eager=eager)
+        if df.storageLevel != StorageLevel.NONE:  # the caller's cache: keep it
+            return df.checkpoint(eager=True)
+        df.persist()
+        try:
+            return df.checkpoint(eager=True)
+        finally:
+            df.unpersist()
     return df.localCheckpoint(eager=eager)

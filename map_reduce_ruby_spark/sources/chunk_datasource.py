@@ -40,7 +40,7 @@ CHUNK_SCHEMA = "key_json string, value_json string"
 
 
 def _canon(obj) -> str:
-    # Matches the reference's JSON.generate byte layout (jsonlines.py).
+    # Matches the reference's JSON.generate byte layout (core.keys.canonical_json).
     return json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
 
 

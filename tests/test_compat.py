@@ -8,6 +8,7 @@ import json
 import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -35,6 +36,10 @@ def _no_reduce():
                 yield w, 1
 
     return NoReduce()
+
+
+def _json_lines(path: str) -> list:
+    return [json.loads(line) for line in Path(path).read_text().splitlines()]
 
 
 def test_end_to_end_worker_flow(spark, tmp_path):
@@ -78,7 +83,7 @@ def test_chunk_files_are_reference_format(spark, tmp_path):
     mapper.map("b a c a")
     parts = mapper.shuffle(out_dir=str(tmp_path / "fmt"))
     [path] = parts.values()
-    lines = [json.loads(l) for l in open(path)]
+    lines = _json_lines(path)
     assert lines == [["a", 2], ["b", 1], ["c", 1]]
 
 
@@ -88,8 +93,7 @@ def test_partition_assignment_matches_partitioner(spark, tmp_path):
     mapper.map("alpha beta gamma delta epsilon")
     parts = mapper.shuffle(out_dir=str(tmp_path / "pa"))
     for pid, path in parts.items():
-        for line in open(path):
-            key, _ = json.loads(line)
+        for key, _ in _json_lines(path):
             assert part(key) == pid
 
 
@@ -98,7 +102,7 @@ def test_no_reduce_mapper_preserves_duplicates(spark, tmp_path):
     mapper = Mapper(_no_reduce(), spark, partitioner=lambda k: 0)
     mapper.map("x y x")
     [path] = mapper.shuffle(out_dir=str(tmp_path / "nr")).values()
-    lines = [json.loads(l) for l in open(path)]
+    lines = _json_lines(path)
     assert lines == [["x", 1], ["x", 1], ["y", 1]]
 
 
@@ -127,7 +131,7 @@ def test_no_reduce_shuffle_is_fifo_stable_by_default(spark, tmp_path):
     mapper.map("key")
     parts = mapper.shuffle(out_dir=str(tmp_path / "fifo"))
     result = {
-        pid: [json.loads(l) for l in open(path)] for pid, path in parts.items()
+        pid: _json_lines(path) for pid, path in parts.items()
     }
     # Same partition split as the reference spec (SHA1 placement), keys
     # numerically sorted (["key3",2] < ["key3",11]), and the two ["key1",1]
@@ -163,7 +167,7 @@ def test_no_reduce_fifo_order_across_many_inputs(spark, tmp_path):
     for i in range(5):
         mapper.map(i)
     [path] = mapper.shuffle(out_dir=str(tmp_path / "fifo2")).values()
-    values = [json.loads(l)[1] for l in open(path)]
+    values = [v for _k, v in _json_lines(path)]
     assert values == [f"v{i}{s}" for i in range(5) for s in ("a", "b")]
 
 
@@ -231,13 +235,15 @@ def test_map_is_the_source_connector(spark, tmp_path):
     i.e. the user's map IS the source connector (reference README.md:35-41).
     Here: inputs are file paths; map opens and tokenizes the file."""
     f1, f2 = str(tmp_path / "a.txt"), str(tmp_path / "b.txt")
-    open(f1, "w").write("spark shuffle spark")
-    open(f2, "w").write("merge shuffle")
+    Path(f1).write_text("spark shuffle spark")
+    Path(f2).write_text("merge shuffle")
 
     def _impl():
         class FileWordCount:
             def map(self, path):
-                for w in open(path).read().split():
+                with open(path) as f:
+                    words = f.read().split()
+                for w in words:
                     yield w, 1
 
             def reduce(self, key, a, b):
@@ -249,7 +255,7 @@ def test_map_is_the_source_connector(spark, tmp_path):
     mapper.map(f1)
     mapper.map(f2)
     [path] = mapper.shuffle(out_dir=str(tmp_path / "out")).values()
-    assert [json.loads(l) for l in open(path)] == [
+    assert _json_lines(path) == [
         ["merge", 1], ["shuffle", 2], ["spark", 2],
     ]
 
@@ -273,7 +279,7 @@ def test_map_forwards_full_arg_list(spark, tmp_path):
     mapper.map("en", "a b a", weight=2)
     mapper.map("de", "a")
     [path] = mapper.shuffle(out_dir=str(tmp_path / "args")).values()
-    assert [json.loads(l) for l in open(path)] == [
+    assert _json_lines(path) == [
         ["de:a", 1], ["en:a", 4], ["en:b", 2],
     ]
 
@@ -305,7 +311,7 @@ def test_threaded_ingest_is_lossless(spark, tmp_path):
         t.join()
 
     [path] = mapper.shuffle(out_dir=str(tmp_path / "threaded")).values()
-    counts = dict(json.loads(l) for l in open(path))
+    counts = dict(_json_lines(path))
     assert sum(counts.values()) == n_threads * per_thread
     assert counts == {f"w{i}": n_threads * per_thread // 10 for i in range(10)}
 
@@ -314,7 +320,7 @@ def test_threaded_ingest_is_lossless(spark, tmp_path):
 
 
 def _read_part_bytes(parts: dict[int, str]) -> dict[int, bytes]:
-    return {pid: open(path, "rb").read() for pid, path in sorted(parts.items())}
+    return {pid: Path(path).read_bytes() for pid, path in sorted(parts.items())}
 
 
 def test_memory_limit_bounds_buffer_and_spills_reference_chunks(spark):
@@ -331,7 +337,7 @@ def test_memory_limit_bounds_buffer_and_spills_reference_chunks(spark):
     assert max_seen < 256 + 64, "buffer must flush at the JSON-size threshold"
     assert len(mapper._spill_chunks) >= 2, "expected multiple spills"
     for path in mapper._spill_chunks:
-        lines = [json.loads(l) for l in open(path)]
+        lines = _json_lines(path)
         # reference chunk format: [[partition, key], value], sorted by
         # (partition, key), consecutive equal keys combined (reduce impl)
         sort_keys = [(pk[0], pk[1]) for pk, _v in lines]
@@ -342,8 +348,7 @@ def test_memory_limit_bounds_buffer_and_spills_reference_chunks(spark):
     parts = mapper.shuffle()
     counts: dict[str, int] = {}
     for path in parts.values():
-        for line in open(path):
-            k, v = json.loads(line)
+        for k, v in _json_lines(path):
             counts[k] = counts.get(k, 0) + v  # keys unique per file anyway
         os.unlink(path)
     assert counts["common"] == 200
@@ -443,7 +448,7 @@ def test_memory_limit_threaded_ingest_is_lossless(spark, tmp_path):
         t.join()
     assert mapper._spill_chunks, "expected spills under the tiny limit"
     [path] = mapper.shuffle(out_dir=str(tmp_path / "tspill")).values()
-    counts = dict(json.loads(l) for l in open(path))
+    counts = dict(_json_lines(path))
     assert counts == {f"w{i}": n_threads * per_thread // 10 for i in range(10)}
 
 

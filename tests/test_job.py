@@ -10,6 +10,7 @@ sorted output, multi-chunk reduce correctness, lazy incomparable-key errors.
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 
@@ -181,19 +182,35 @@ class TestChunkFileInterop:
         assert set(files) == {0, 2, 3}  # same placement as the reference spec
         lines = [
             json.loads(line)
-            for line in open(files[2], encoding="utf-8").read().splitlines()
+            for line in Path(files[2]).read_text(encoding="utf-8").splitlines()
         ]
         assert lines == [[["key2"], {"value": "x"}], [["key4"], {"value": "x"}]]
 
+    def test_shuffle_to_files_has_one_writer(self, spark, tmp_path):
+        # Default arguments publish one mr_chunks generation (manifest +
+        # success marker, chunk-<pid>-<id>.jsonl files) and nothing else;
+        # the executor-local partition-<pid>.jsonl writer is gone.
+        job = Job(map_fn=lambda t: ((w, 1) for w in t.split()),
+                  reduce_fn=lambda k, a, b: a + b, num_partitions=3)
+        files = job.shuffle_to_files(spark, ["a b", "b c"], str(tmp_path / "gen"))
+        names = sorted(os.listdir(tmp_path / "gen"))
+        assert "_MANIFEST.json" in names and "_SUCCESS" in names
+        assert not [n for n in names if n.startswith("partition-")], names
+        assert sorted(os.path.basename(p) for p in files.values()) == [
+            n for n in names if n.startswith("chunk-")
+        ]
+        with pytest.raises(ValueError, match="removed"):
+            job.shuffle_to_files(spark, ["a"], str(tmp_path / "local"),
+                                 shared_storage=False)
+        assert not os.path.exists(tmp_path / "local")
+
     def test_reduce_files(self, spark, tmp_path):
         # Reducer-side ingest (Reducer#add_chunk + #reduce).
-        p1, p2 = str(tmp_path / "c1.jsonl"), str(tmp_path / "c2.jsonl")
-        from map_reduce_ruby_spark.sources.jsonlines import write_chunk
-
-        write_chunk(p1, [("a", 1), ("b", 1)])
-        write_chunk(p2, [("a", 2), ("c", 5)])
+        p1, p2 = tmp_path / "c1.jsonl", tmp_path / "c2.jsonl"
+        p1.write_text('["a",1]\n["b",1]\n')
+        p2.write_text('["a",2]\n["c",5]\n')
         result = Job.reduce_files(
-            spark, [p1, p2], reduce_fn=lambda k, a, b: a + b, num_partitions=2
+            spark, [str(p1), str(p2)], reduce_fn=lambda k, a, b: a + b, num_partitions=2
         )
         assert dict(result.collect()) == {"a": 3, "b": 1, "c": 5}
 

@@ -133,12 +133,8 @@ def test_shuffle_to_files_via_arrow_bytes_match_classic(spark, sf_dir, tmp_path)
 
     classic_dir = str(tmp_path / "classic")
     arrow_dir = str(tmp_path / "arrow")
-    pmap_c = job.shuffle_to_files(
-        spark, docs.rdd.map(lambda r: r[0]), classic_dir, shared_storage=True
-    )
-    pmap_a = job.shuffle_to_files(
-        spark, docs, arrow_dir, shared_storage=True, via_arrow=True
-    )
+    pmap_c = job.shuffle_to_files(spark, docs.rdd.map(lambda r: r[0]), classic_dir)
+    pmap_a = job.shuffle_to_files(spark, docs, arrow_dir, via_arrow=True)
 
     assert sorted(pmap_c) == sorted(pmap_a)  # same partition ids
     for pid in pmap_c:
@@ -161,15 +157,8 @@ def test_shuffle_to_files_via_arrow_bytes_match_classic(spark, sf_dir, tmp_path)
 def test_via_arrow_guards(spark, sf_dir, tmp_path):
     job = Job(map_fn=_map_wc, reduce_fn=_fold, num_partitions=4)
     docs = _docs(spark, sf_dir)
-    with pytest.raises(ValueError, match="shared_storage"):
-        job.shuffle_to_files(spark, docs, str(tmp_path / "x"), via_arrow=True)
     with pytest.raises(TypeError, match="DataFrame"):
-        job.shuffle_to_files(
-            spark, ["a b"], str(tmp_path / "y"), shared_storage=True, via_arrow=True
-        )
+        job.shuffle_to_files(spark, ["a b"], str(tmp_path / "y"), via_arrow=True)
     nr = Job(map_fn=_map_wc, num_partitions=4)
     with pytest.raises(ValueError, match="stable"):
-        nr.shuffle_to_files(
-            spark, docs, str(tmp_path / "z"),
-            shared_storage=True, stable=True, via_arrow=True,
-        )
+        nr.shuffle_to_files(spark, docs, str(tmp_path / "z"), stable=True, via_arrow=True)

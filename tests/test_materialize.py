@@ -6,8 +6,8 @@ Pins the three properties the round-11 rewrite relies on:
 - results are identical to the raw plan, eager and lazy;
 - with SPARK_GRAFT_CHECKPOINT_DIR set, truncation goes through RELIABLE
   checkpoint() (files under the dir — survives executor loss on a real
-  cluster) and an iterative consumer (connected_components) still produces
-  identical results.
+  cluster), computes each row once, and an iterative consumer
+  (connected_components) still produces identical results.
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from map_reduce_ruby_spark.materialize import _CHECKPOINT_DIR_ENV, truncate
@@ -61,6 +62,26 @@ def test_reliable_checkpoint_knob(spark, tmp_path, monkeypatch):
         for f in fn
     ]
     assert found, "reliable checkpoint wrote no files under the durable dir"
+
+
+def test_reliable_checkpoint_computes_each_row_once(spark, tmp_path, monkeypatch):
+    """Under the durability knob the checkpoint files are written from a
+    transient persist, so each row of a site is computed once, lazy or
+    eager — not once for the consumer and again for the checkpoint write."""
+    monkeypatch.setenv(_CHECKPOINT_DIR_ENV, str(tmp_path / "ck_once"))
+    for eager in (False, True):
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def counted(x):
+            acc.add(1)
+            return x
+
+        base = spark.range(0, 20, 1, 2).select(counted("id").alias("id"))
+        t = truncate(base, eager=eager)
+        assert sorted(r.id for r in t.collect()) == list(range(20))
+        assert acc.value == 20, (eager, acc.value)
+        assert base.storageLevel == StorageLevel.NONE  # transient cache dropped
 
 
 def test_cc_identical_under_reliable_checkpoint(spark, tmp_path, monkeypatch):

@@ -10,8 +10,20 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from map_reduce_ruby_spark.core.keys import canonical_json
 from map_reduce_ruby_spark.sources import load_table
-from map_reduce_ruby_spark.sources.jsonlines import chunks_rdd, read_chunk, write_chunk
+
+
+def write_chunk(path, pairs):
+    """Write pairs as one reference-format chunk: ``json([key, value])`` per line."""
+    with open(path, "w", encoding="utf-8") as f:
+        f.writelines(canonical_json([k, v]) + "\n" for k, v in pairs)
+
+
+def read_chunk(path):
+    """The (key, value) pairs of one reference-format chunk file."""
+    with open(path, encoding="utf-8") as f:
+        return [tuple(json.loads(line)) for line in f if line.strip()]
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -49,17 +61,6 @@ def test_partitioned_parquet_sink(spark, sf_dir, tmp_path):
         F.col("event_type") == "click"
     ).count()
     assert "PartitionFilters: [isnotnull(event_type" in plan, plan
-
-
-def test_chunk_file_helpers_roundtrip(tmp_path, spark):
-    path = str(tmp_path / "chunk.jsonl")
-    pairs = [(["a", 1], {"v": 1}), (["b", 2], {"v": 2})]
-    write_chunk(path, pairs)
-    with open(path) as f:
-        assert f.readline().strip() == '[["a",1],{"v":1}]'  # reference byte format
-    assert list(read_chunk(path)) == pairs
-    rdd_pairs = sorted(chunks_rdd(spark, [path]).collect())
-    assert rdd_pairs == sorted([(["a", 1], {"v": 1}), (["b", 2], {"v": 2})])
 
 
 def test_training_shard_publish(spark, sf_dir, tmp_path):
@@ -167,7 +168,7 @@ def test_orc_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_shuffle_to_files_shared_storage_roundtrip(spark, tmp_path):
-    """Job.shuffle_to_files(shared_storage=True): the cluster-safe handoff —
+    """Job.shuffle_to_files: the cluster-safe handoff —
     executors write reference-format sorted runs through the mr_chunks
     DataSource writer straight into shared storage (no driver hop), and the
     resulting files must (a) be byte-compatible reference chunks, (b) be
@@ -184,7 +185,7 @@ def test_shuffle_to_files_shared_storage_roundtrip(spark, tmp_path):
     inputs = ["spark merge shuffle", "merge spark", "zed alpha merge"]
     job = Job(map_fn=map_fn, reduce_fn=reduce_fn, num_partitions=4)
     out = str(tmp_path / "shared_chunks")
-    pmap = job.shuffle_to_files(spark, inputs, out, shared_storage=True)
+    pmap = job.shuffle_to_files(spark, inputs, out)
 
     assert pmap and all(os.path.basename(p).startswith("chunk-") for p in pmap.values())
     merged = {}
@@ -226,7 +227,7 @@ def test_binaryfile_source_reads_blobs(spark, sf_dir):
 
 
 def test_shuffle_to_files_shared_storage_guards(spark, tmp_path):
-    """The shared-storage mode must refuse (a) URIs whose scheme has no
+    """shuffle_to_files must refuse (a) URIs whose scheme has no
     registered storage backend (executors could not write there) and (b) a
     directory holding a previous generation's chunks (the append-mode write
     would interleave generations and the map would return stale files)."""
@@ -238,12 +239,12 @@ def test_shuffle_to_files_shared_storage_guards(spark, tmp_path):
     job = Job(map_fn=map_fn, reduce_fn=lambda k, a, b: a + b, num_partitions=2)
 
     with pytest.raises(ValueError, match="no storage backend registered"):
-        job.shuffle_to_files(spark, ["a"], "gs://bucket/chunks", shared_storage=True)
+        job.shuffle_to_files(spark, ["a"], "gs://bucket/chunks")
 
     out = str(tmp_path / "gen0")
-    job.shuffle_to_files(spark, ["a b"], out, shared_storage=True)
+    job.shuffle_to_files(spark, ["a b"], out)
     with pytest.raises(ValueError, match="fresh generation"):
-        job.shuffle_to_files(spark, ["c d"], out, shared_storage=True)
+        job.shuffle_to_files(spark, ["c d"], out)
 
 
 def test_shared_storage_handoff_uses_commit_messages_not_listing(spark, tmp_path):
@@ -266,7 +267,7 @@ def test_shared_storage_handoff_uses_commit_messages_not_listing(spark, tmp_path
     (out / "chunk-00099.jsonl").write_text('["stray",1]\n')
 
     job = Job(map_fn=map_fn, reduce_fn=lambda k, a, b: a + b, num_partitions=4)
-    pmap = job.shuffle_to_files(spark, ["x y", "x z"], str(out), shared_storage=True)
+    pmap = job.shuffle_to_files(spark, ["x y", "x z"], str(out))
 
     assert pmap, "expected non-empty partition map"
     assert 99 not in pmap and all("chunk-00099" not in p for p in pmap.values())
@@ -287,7 +288,7 @@ def test_shared_storage_handoff_accepts_file_uri(spark, tmp_path):
 
     job = Job(map_fn=map_fn, reduce_fn=lambda k, a, b: a + b, num_partitions=3)
     uri = "file://" + str(tmp_path / "mounted" / "gen1")
-    pmap = job.shuffle_to_files(spark, ["m n", "m"], uri, shared_storage=True)
+    pmap = job.shuffle_to_files(spark, ["m n", "m"], uri)
 
     assert pmap and all(p.startswith("file://") for p in pmap.values())
     merged = {}
@@ -430,12 +431,10 @@ def test_chunk_writer_abort_leaves_no_committed_generation(spark, tmp_path):
 
 
 def test_shared_storage_stable_no_reduce_order(spark, tmp_path):
-    """stable=True must survive the shared-storage writer: equal-key
+    """stable=True must survive the mr_chunks writer: equal-key
     duplicates keep input order in the published chunk bytes (the
     reference's FIFO merge), since the narrow RDD->rows map and the
     per-task file write both preserve in-partition order."""
-    import json as _json
-
     from map_reduce_ruby_spark.core.job import Job
 
     def map_fn(i):
@@ -443,11 +442,9 @@ def test_shared_storage_stable_no_reduce_order(spark, tmp_path):
 
     job = Job(map_fn=map_fn, reduce_fn=None, num_partitions=2)
     out = str(tmp_path / "stable_shared")
-    pmap = job.shuffle_to_files(
-        spark, list(range(6)), out, shared_storage=True, stable=True
-    )
+    pmap = job.shuffle_to_files(spark, list(range(6)), out, stable=True)
     [path] = pmap.values()
-    values = [_json.loads(l)[1] for l in open(path)]
+    values = [v for _k, v in read_chunk(path)]
     assert values == [f"v{i}" for i in range(6)], values
 
 
@@ -472,9 +469,7 @@ def test_shared_storage_handoff_through_registered_backend(spark, tmp_path):
             yield w, 1
 
     job = Job(map_fn=map_fn, reduce_fn=lambda k, a, b: a + b, num_partitions=3)
-    pmap = job.shuffle_to_files(
-        spark, ["u v", "u w"], "mock://bucket/gen1", shared_storage=True
-    )
+    pmap = job.shuffle_to_files(spark, ["u v", "u w"], "mock://bucket/gen1")
     assert pmap and all(p.startswith("mock://bucket/gen1/") for p in pmap.values())
     merged = {}
     for uri in pmap.values():
@@ -485,7 +480,7 @@ def test_shared_storage_handoff_through_registered_backend(spark, tmp_path):
     assert os.path.exists(os.path.join(root, "bucket/gen1/_MANIFEST.json"))
     # generation guard works through the backend too
     with pytest.raises(ValueError, match="fresh generation"):
-        job.shuffle_to_files(spark, ["x"], "mock://bucket/gen1", shared_storage=True)
+        job.shuffle_to_files(spark, ["x"], "mock://bucket/gen1")
 
 
 def test_s3_storage_backend_end_to_end(spark, tmp_path):
@@ -521,9 +516,7 @@ def test_s3_storage_backend_end_to_end(spark, tmp_path):
                 yield w, 1
 
         job = Job(map_fn=map_fn, reduce_fn=lambda k, a, b: a + b, num_partitions=3)
-        pmap = job.shuffle_to_files(
-            spark, ["s3 put s3", "put get"], "s3://bucket/gen1", shared_storage=True
-        )
+        pmap = job.shuffle_to_files(spark, ["s3 put s3", "put get"], "s3://bucket/gen1")
         assert pmap and all(p.startswith("s3://bucket/gen1/") for p in pmap.values())
         merged = {}
         for uri in pmap.values():
@@ -543,7 +536,7 @@ def test_s3_storage_backend_end_to_end(spark, tmp_path):
         assert litter == []
         # one-generation guard holds through the S3 backend too
         with pytest.raises(ValueError, match="fresh generation"):
-            job.shuffle_to_files(spark, ["x"], "s3://bucket/gen1", shared_storage=True)
+            job.shuffle_to_files(spark, ["x"], "s3://bucket/gen1")
     finally:
         register_storage_backend("s3", prior)
 
