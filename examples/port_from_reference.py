@@ -110,10 +110,10 @@ def port_4_object_store(spark) -> dict:
     mappers upload partition files to S3, reducers download them), run
     end-to-end: register a storage backend for the bucket scheme ONCE on
     the driver, address everything by URI, and the partition->path map
-    comes back from the writer's commit-message manifest — no directory
-    listing anywhere. Here the 'object store' is a prefix-mapped local
-    backend; an s3 deployment swaps in its boto3 wrapper with the same
-    five operations."""
+    comes back from the manifest the driver builds from the tasks'
+    (partition, file, rows) reports — no directory listing anywhere. Here
+    the 'object store' is a prefix-mapped local backend; an s3 deployment
+    swaps in its boto3 wrapper with the same five operations."""
     from map_reduce_ruby_spark.sources.storage import (
         PrefixMappedStorage,
         register_storage_backend,

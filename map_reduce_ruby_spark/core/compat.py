@@ -47,8 +47,8 @@ and open files at any input volume. It needs no executors and no disk shared
 with them; the ``spark`` arguments are kept for signature compatibility.
 The 100 TB path remains handing ``Job.run`` an RDD/DataFrame directly (the
 map function then runs inside Spark tasks against a distributed source), or
-``Job.shuffle_to_files``, whose executors publish reference-format chunks
-through the ``mr_chunks`` writer to any registered storage backend.
+``Job.shuffle_to_files``, whose last Python stage publishes reference-format
+chunks to any registered storage backend.
 """
 
 from __future__ import annotations

@@ -36,11 +36,14 @@ from pyspark.sql import SparkSession
 from map_reduce_ruby_spark.core.keys import SortKey, canonical_json
 from map_reduce_ruby_spark.core.partitioner import HashPartitioner, PartitionFn
 from map_reduce_ruby_spark.sources.chunk_datasource import (
-    CHUNK_SCHEMA,
-    MANIFEST_NAME,
-    register_chunk_source,
+    chunk_file_name,
+    commit_generation,
+    new_write_id,
+    publish_chunk,
+    refuse_completed_generation,
+    unpublish_chunks,
 )
-from map_reduce_ruby_spark.sources.storage import join_uri, pickle_backend, storage_for
+from map_reduce_ruby_spark.sources.storage import join_uri, storage_for
 
 
 class MapReduceError(Exception):
@@ -282,6 +285,14 @@ class Job:
         (its repartitionAndSortWithinPartitions is Spark's spilling
         external sort).
         """
+        return self._arrow_plan(spark, df, sort_output)
+
+    def _arrow_plan(self, spark: SparkSession, df: Any, sort_output: bool, publish=None):
+        """``run_arrow``'s plan. With ``publish`` — a picklable
+        ``(pid, pairs) -> (pid, file, rows)`` — the reduce-side
+        ``mapInArrow`` hands each partition's canonical (k, v) JSON pairs to
+        it and returns one ``partition int, file string, rows long`` row
+        per partition instead of the pairs."""
         import pyarrow as pa
 
         map_fn, reduce_fn = self.map_fn, self.reduce_fn
@@ -407,7 +418,30 @@ class Job:
         # one JVM Tungsten exchange on the steering id; partition index ==
         # partitioner(key) afterwards (O6 placement preserved end-to-end)
         shuffled = mapped.repartition(nparts, F.col("steer"))
-        return shuffled.mapInArrow(reduce_side, schema="k string, v string")
+        if publish is None:
+            return shuffled.mapInArrow(reduce_side, schema="k string, v string")
+
+        def publish_side(batches):
+            from pyspark import TaskContext
+
+            pairs = (
+                kv
+                for b in reduce_side(batches)
+                for kv in zip(b.column(0).to_pylist(), b.column(1).to_pylist())
+            )
+            pid, name, rows = publish(TaskContext.get().partitionId(), pairs)
+            yield pa.record_batch(
+                [
+                    pa.array([pid], pa.int32()),
+                    pa.array([name], pa.string()),
+                    pa.array([rows], pa.int64()),
+                ],
+                names=["partition", "file", "rows"],
+            )
+
+        return shuffled.mapInArrow(
+            publish_side, schema="partition int, file string, rows long"
+        )
 
     # --------------------------------------------------- chunk-file interop
 
@@ -426,18 +460,26 @@ class Job:
         ``json([key, value])``, keys sorted within the file
         (reference lib/map_reduce/mapper.rb:115,131-135 chunk format).
 
-        The sorted shuffle output is written through the ``mr_chunks``
-        DataSource writer (sources/chunk_datasource.py) — one
-        reference-format sorted run per partition, written by the executors
-        directly into ``out_dir``. ``out_dir`` may be a plain/``file://``
+        The last Python stage of the shuffle publishes its partition's sorted
+        run straight into ``out_dir`` (``chunk_datasource.publish_chunk``,
+        the same body the ``mr_chunks`` writer uses, so the bytes are
+        identical) and returns one ``(partition, file, rows)`` row; the
+        driver collects at most ``num_partitions`` such rows and commits
+        ``_MANIFEST.json`` + ``_SUCCESS`` from them
+        (``chunk_datasource.commit_generation``). The partition->path map
+        comes from that manifest — never from a directory listing — and no
+        data row ever crosses the driver, which is what makes the
+        reference's S3 handoff story (reference README.md:60-67,78-84) work
+        end-to-end on a real cluster. ``out_dir`` may be a plain/``file://``
         path (local disk or an NFS mount) or any URI whose scheme has a
         registered backend (sources/storage.py — an s3 deployment registers
-        its client once). No row ever crosses the driver, and the
-        partition->path map is read from the writer's ``_MANIFEST.json`` —
-        built on the driver from the tasks' commit messages, never from a
-        directory listing — which is what makes the reference's S3 handoff
-        story (reference README.md:60-67,78-84) work end-to-end on a real
-        cluster. ``out_dir`` must not already hold a completed generation.
+        its client once); the resolved backend rides to the tasks in their
+        closure. ``out_dir`` must not already hold a completed generation.
+        If the job fails, the driver deletes (backend permitting) every
+        ``chunk-<pid>-<write_id>.jsonl`` name this attempt could have
+        published and publishes no manifest. No data source is registered:
+        a caller that reads the generation back as a DataFrame registers the
+        ``mr_chunks`` format on its session first (sources/chunk_datasource.py).
 
         ``stable=True`` (no-reduce mode): equal-key duplicates keep input
         order in the chunk files, matching the reference's FIFO-stable merge
@@ -446,15 +488,15 @@ class Job:
         pass; leave it off unless byte-stable duplicate order is required.
 
         ``via_arrow=True`` (a DataFrame input; incompatible with
-        ``stable``): the shuffle runs through ``run_arrow`` — Arrow
+        ``stable``): the shuffle runs through ``run_arrow``'s plan — Arrow
         transport end-to-end, JVM Tungsten exchange, no Python-pickle leg —
-        and the writer receives already-canonical (k, v) JSON strings.
-        ``map_fn`` then sees ``run_arrow``'s plain row tuples and the fold
-        JSON-roundtripped values, which is why the path is chosen by the
-        caller and not by input type. Steered placement keeps partition
-        index == ``partitioner(key)``, so the manifest's partition ids and
-        each file's JSON-lines bytes are identical to the ``run`` path's
-        (pinned by tests/test_job_arrow.py).
+        and its reduce-side ``mapInArrow`` publishes the already-canonical
+        (k, v) JSON strings. ``map_fn`` then sees ``run_arrow``'s plain row
+        tuples and the fold JSON-roundtripped values, which is why the path
+        is chosen by the caller and not by input type. Steered placement
+        keeps partition index == ``partitioner(key)``, so the manifest's
+        partition ids and each file's JSON-lines bytes are identical to the
+        ``run`` path's (pinned by tests/test_job_arrow.py).
 
         ``shared_storage`` is accepted only as ``True``: the executor-local
         ``shared_storage=False`` writer was removed.
@@ -463,7 +505,7 @@ class Job:
             raise ValueError(
                 "shared_storage=False (the executor-local partition-file "
                 "writer) was removed; shuffle_to_files always publishes "
-                "through the mr_chunks writer"
+                "reference-format chunks through a storage backend"
             )
         if via_arrow and stable:
             raise ValueError(
@@ -474,49 +516,39 @@ class Job:
         if via_arrow and not hasattr(inputs, "mapInArrow"):
             raise TypeError("via_arrow requires a DataFrame input")
         backend = storage_for(out_dir)  # raises for unregistered schemes
-        manifest_uri = join_uri(out_dir, MANIFEST_NAME)
-        # COMPLETED generation only (manifest + _SUCCESS): a manifest
-        # without the marker is a crashed half-commit, and rewriting it
-        # is the recovery path (mirrors _ChunkWriter's plan-time guard).
-        if backend.exists(manifest_uri) and backend.exists(join_uri(out_dir, "_SUCCESS")):
-            raise ValueError(
-                f"{out_dir!r} already holds a completed chunk generation "
-                f"({MANIFEST_NAME} + _SUCCESS present) — the append-mode "
-                "writer would interleave generations and the path map "
-                "would return stale chunks; write each shuffle to a "
-                "fresh generation directory"
-            )
+        refuse_completed_generation(backend, out_dir)
+        write_id = new_write_id()
 
-        register_chunk_source(spark)
-        if via_arrow:
-            # already canonical (k, v) JSON strings, key-sorted within
-            # partition, partition index == partitioner(key): feed the
-            # writer directly — no per-row Python canon pass at all
-            # (toDF renames to the writer's field names; narrow, no
-            # exchange)
-            kv_df = self.run_arrow(spark, inputs, sort_output=True).toDF(
-                "key_json", "value_json"
+        def publish(pid, pairs):
+            return publish_chunk(backend, out_dir, pid, write_id, pairs)
+
+        try:
+            if via_arrow:
+                plan = self._arrow_plan(spark, inputs, sort_output=True, publish=publish)
+                published = plan.collect()  # bounded: one row per partition
+            else:
+                result = self.run(spark, inputs, sort_output=True, stable=stable)
+                # narrow: partition ids and in-partition sort order carry
+                # through to the published file
+                published = result.mapPartitionsWithIndex(
+                    lambda pid, kvs: [
+                        publish(
+                            pid,
+                            ((canonical_json(k), canonical_json(v)) for k, v in kvs),
+                        )
+                    ]
+                ).collect()  # bounded: one (pid, file, rows) per partition
+            files = commit_generation(backend, out_dir, write_id, published)
+        except BaseException:
+            # names are deterministic, so no listing and no dependence on
+            # which tasks reported back before the failure
+            unpublish_chunks(
+                backend,
+                out_dir,
+                [chunk_file_name(p, write_id) for p in range(self.num_partitions)],
             )
-        else:
-            result = self.run(spark, inputs, sort_output=True, stable=stable)
-            # RDD -> (key_json, value_json) rows is a narrow map: partition
-            # ids and in-partition sort order carry through to the writer,
-            # which emits chunk-<pid>-<writeid>.jsonl per task
-            # (TaskContext.partitionId + the writer's generation token)
-            # and reports (partition, file, rows) in its commit message.
-            rows = result.map(lambda kv: (canonical_json(kv[0]), canonical_json(kv[1])))
-            kv_df = spark.createDataFrame(rows, CHUNK_SCHEMA)
-        # the backend resolved above (driver-side registry) rides to the
-        # writer's worker processes as a cloudpickle option — see
-        # sources/storage.py pickle_backend
-        kv_df.write.format("mr_chunks").mode("append").option(
-            "backend_pickle", pickle_backend(backend)
-        ).save(out_dir)
-        manifest = json.loads(backend.read_text(manifest_uri))
-        return {
-            int(e["partition"]): join_uri(out_dir, e["file"])
-            for e in manifest["files"]
-        }
+            raise
+        return {e["partition"]: join_uri(out_dir, e["file"]) for e in files}
 
     @classmethod
     def reduce_files(

@@ -36,6 +36,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from map_reduce_ruby_spark.sources.storage import (
+    join_uri,
+    storage_for,
+    unpickle_backend,
+    uri_scheme,
+)
+
 CHUNK_SCHEMA = "key_json string, value_json string"
 
 
@@ -116,12 +123,6 @@ def _reader_backend(options: dict):
     option when present (readers, like writers, may run in worker processes
     where the driver's registry is invisible), else from the registry in
     this process."""
-    from map_reduce_ruby_spark.sources.storage import (
-        storage_for,
-        unpickle_backend,
-        uri_scheme,
-    )
-
     path = options.get("path", "")
     if uri_scheme(path) in ("", "file"):
         return None, False
@@ -132,8 +133,6 @@ def _reader_backend(options: dict):
 def _remote_files(backend, path: str) -> list[str]:
     """Chunk files under a remote directory URI: backend listing + the same
     '_'/'.'-prefix skip rule the local listing applies."""
-    from map_reduce_ruby_spark.sources.storage import join_uri
-
     lister = getattr(backend, "list", None)
     if lister is None:
         raise ValueError(
@@ -193,8 +192,6 @@ class _ChunkReader(DataSourceReader):
         # Identical manifest policy, through the backend: manifest+_SUCCESS
         # -> read the manifest's file list; manifest sans _SUCCESS -> refuse;
         # no manifest -> backend listing.
-        from map_reduce_ruby_spark.sources.storage import join_uri
-
         manifest_uri = join_uri(self.path, MANIFEST_NAME)
         if self._backend.exists(manifest_uri):
             success_uri = join_uri(self.path, "_SUCCESS")
@@ -345,13 +342,123 @@ class _ChunkStreamReader(SimpleDataSourceStreamReader):
         return self._rows(files[start["n"] : end["n"]])
 
 
+MANIFEST_NAME = "_MANIFEST.json"
+
+
+def new_write_id() -> str:
+    """Generation token: chunk filenames embed a per-write id, so two
+    writers racing on one directory can never replace each other's files —
+    each generation's names are disjoint, and the manifest records which
+    generation its file list belongs to. The loser of a race leaves strays
+    with ITS token; manifest-based reads never see them."""
+    return uuid.uuid4().hex[:12]
+
+
+def chunk_file_name(pid: int, write_id: str) -> str:
+    # pid prefix first so lexicographic order within a generation is
+    # partition order (the streaming reader's increasing-names contract);
+    # the write-id suffix makes the name generation-unique.
+    return f"chunk-{pid:05d}-{write_id}.jsonl"
+
+
+def refuse_completed_generation(backend, path: str) -> None:
+    """One COMPLETED write-generation per directory (manifest + _SUCCESS).
+    Writers call this before any task runs, so raising keeps the existing
+    generation untouched (and saves the doomed job). A manifest WITHOUT
+    _SUCCESS is a crashed half-commit: recovery overwrites are allowed
+    (readers refuse half-commits — batch raises on manifest-sans-_SUCCESS,
+    streaming fixtures gate on _SUCCESS)."""
+    if backend.exists(join_uri(path, MANIFEST_NAME)) and backend.exists(
+        join_uri(path, "_SUCCESS")
+    ):
+        raise ValueError(
+            f"chunk directory {path!r} already holds a completed generation "
+            f"({MANIFEST_NAME} + _SUCCESS): the mr_chunks format is one "
+            "write-generation per directory (appending would shadow the "
+            "prior generation's files in manifest-based reads). Write each "
+            "shuffle to a fresh generation directory."
+        )
+
+
+def publish_chunk(backend, path: str, pid: int, write_id: str, pairs) -> tuple:
+    """Publish one partition's ``(key_json, value_json)`` pairs as
+    ``chunk-<pid>-<write_id>.jsonl`` under ``path``; returns
+    ``(pid, file name or None, rows)``. Rows stream to task-local scratch
+    first, then the finished file is published atomically through the
+    storage backend — the same shape an object-store upload takes (write
+    local, one atomic PUT). An empty partition publishes nothing (the
+    reference's split also only emits files for non-empty partitions,
+    lib/map_reduce/mapper.rb:100-121)."""
+    fd, scratch = tempfile.mkstemp(prefix="mr_chunk_w_", suffix=".jsonl")
+    rows = 0
+    try:
+        with os.fdopen(fd, "w", encoding="utf-8") as f:
+            for key_json, value_json in pairs:
+                f.write(f"[{key_json},{value_json}]\n")
+                rows += 1
+        if rows == 0:
+            return pid, None, 0
+        name = chunk_file_name(pid, write_id)
+        backend.makedirs(path)
+        backend.put_file_atomic(scratch, join_uri(path, name))
+        return pid, name, rows
+    finally:
+        if os.path.exists(scratch):
+            os.unlink(scratch)
+
+
+def commit_generation(backend, path: str, write_id: str, published) -> list[dict]:
+    """Publish ``_MANIFEST.json`` from the tasks' ``(pid, file, rows)``
+    reports, then ``_SUCCESS``; returns the manifest's file entries.
+
+    The manifest is the authoritative partition->file map (no listing:
+    object stores have no cheap consistent listing) and describes THIS
+    write. The primary generation guard runs before any task; re-checking
+    here closes the window where a CONCURRENT writer completed a generation
+    between our plan time and our commit: because chunk filenames are
+    generation-unique, the other writer's files are untouched by ours —
+    losing this race leaves only our own strays, never a corrupted
+    winner."""
+    backend.makedirs(path)
+    refuse_completed_generation(backend, path)
+    files = sorted(
+        (
+            {"partition": int(pid), "file": name, "rows": int(rows)}
+            for pid, name, rows in published
+            if name is not None
+        ),
+        key=lambda e: e["partition"],
+    )
+    manifest = {"format": "mr_chunks/1", "write_id": write_id, "files": files}
+    backend.write_text_atomic(
+        join_uri(path, MANIFEST_NAME),
+        json.dumps(manifest, separators=(",", ":")) + "\n",
+    )
+    # success marker ('_'-prefixed => skipped by readers): consumers gate
+    # on it to distinguish a completed write from a killed-mid-flight one
+    backend.write_text_atomic(join_uri(path, "_SUCCESS"), "")
+    return files
+
+
+def unpublish_chunks(backend, path: str, names) -> None:
+    """BEST-EFFORT delete of a failed write's chunk files. ``delete()`` is
+    an optional backend operation; backends without it skip cleanup. A
+    stray that survives never enters a manifest, so readers never see it."""
+    delete = getattr(backend, "delete", None)
+    if delete is None:
+        return
+    for name in names:
+        try:
+            delete(join_uri(path, name))
+        except OSError:
+            pass
+
+
 class _ChunkCommit(WriterCommitMessage):
     """Each task's report back to the driver: which partition it wrote,
     the chunk filename it published (None when the partition was empty),
     and how many rows. The driver's commit() turns these into
-    _MANIFEST.json — the partition->path map's source of truth, replacing
-    any directory listing (object stores have no cheap consistent listing;
-    the commit messages are authoritative either way)."""
+    _MANIFEST.json."""
 
     def __init__(self, partition_id: int, filename: str | None, rows: int):
         self.partition_id = partition_id
@@ -359,148 +466,64 @@ class _ChunkCommit(WriterCommitMessage):
         self.rows = rows
 
 
-MANIFEST_NAME = "_MANIFEST.json"
-
-
 class _ChunkWriter(DataSourceWriter):
-    def __init__(self, options: dict):
-        from map_reduce_ruby_spark.sources.storage import (
-            storage_for,
-            unpickle_backend,
-        )
+    """``df.write.format("mr_chunks")``: the DataSource adapter over
+    ``publish_chunk`` / ``commit_generation``."""
 
+    def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("mr_chunks sink requires a path")
-        # The storage backend arrives RESOLVED, as a cloudpickle blob in
-        # the options (Job.shuffle_to_files resolves it on the driver,
-        # where the registry lives, and sets the option): writer init and
-        # write tasks both run in separate Python worker processes, so
-        # neither can consult the driver's registry. A plain
-        # df.write.format("mr_chunks") without the option still works for
-        # local/file:// paths via the default registry entries.
+        # Writer init and write tasks run in separate Python worker
+        # processes, so neither can consult the driver's storage registry:
+        # a caller with a custom backend passes it resolved, as a
+        # cloudpickle blob in the ``backend_pickle`` option
+        # (storage.pickle_backend). Without the option, local/file:// paths
+        # work via the default registry entries.
         blob = options.get("backend_pickle")
         self._backend = unpickle_backend(blob) if blob else storage_for(self.path)
-        # Generation token: chunk filenames embed a per-write id (minted
-        # once at plan time, shared by every task via pickling), so two
-        # writers racing on one directory can never os.replace each other's
-        # files — each generation's names are disjoint, and the manifest
-        # records which generation its file list belongs to. The loser of
-        # a race leaves strays with ITS token; manifest-based reads never
-        # see them.
-        self._write_id = uuid.uuid4().hex[:12]
-        # One COMPLETED write-generation per directory, enforced BEFORE any
-        # task runs. Writer construction happens at plan time, ahead of
-        # task launch, so raising here keeps the existing generation
-        # untouched (and saves the doomed job). A manifest WITHOUT _SUCCESS
-        # is a crashed half-commit: recovery overwrites are allowed
-        # (readers refuse half-commits — batch raises on manifest-sans-
-        # _SUCCESS, streaming fixtures gate on _SUCCESS).
-        self._refuse_completed_generation()
-
-    def _refuse_completed_generation(self) -> None:
-        from map_reduce_ruby_spark.sources.storage import join_uri
-
-        if self._backend.exists(
-            join_uri(self.path, MANIFEST_NAME)
-        ) and self._backend.exists(join_uri(self.path, "_SUCCESS")):
-            raise RuntimeError(
-                f"chunk directory {self.path!r} already holds a completed "
-                "generation (_MANIFEST.json + _SUCCESS): the mr_chunks format "
-                "is one write-generation per directory (appending would "
-                "shadow the prior generation's files in manifest-based "
-                "reads). Write to a fresh directory."
-            )
+        # minted once at plan time, shared by every task via pickling
+        self._write_id = new_write_id()
+        # writer construction happens at plan time, ahead of task launch
+        refuse_completed_generation(self._backend, self.path)
 
     def write(self, iterator) -> _ChunkCommit:
         from pyspark import TaskContext
 
-        from map_reduce_ruby_spark.sources.storage import join_uri
-
-        pid = TaskContext.get().partitionId()
-        # pid prefix first so lexicographic order within a generation is
-        # partition order (the streaming reader's increasing-names
-        # contract); the write-id suffix makes the name generation-unique.
-        name = f"chunk-{pid:05d}-{self._write_id}.jsonl"
-        # Stream rows to executor-local scratch first, then publish the
-        # finished file atomically through the storage backend — the same
-        # shape an object-store upload takes (write local, one atomic PUT).
-        fd, scratch = tempfile.mkstemp(prefix="mr_chunk_w_", suffix=".jsonl")
-        rows = 0
-        try:
-            with os.fdopen(fd, "w", encoding="utf-8") as f:
-                for row in iterator:
-                    f.write(f"[{row.key_json},{row.value_json}]\n")
-                    rows += 1
-            if rows == 0:
-                # empty partition: publish nothing (the reference's split
-                # also only emits files for non-empty partitions,
-                # lib/map_reduce/mapper.rb:100-121)
-                return _ChunkCommit(pid, None, 0)
-            self._backend.makedirs(self.path)
-            self._backend.put_file_atomic(scratch, join_uri(self.path, name))
-            return _ChunkCommit(pid, name, rows)
-        finally:
-            if os.path.exists(scratch):
-                os.unlink(scratch)
+        pairs = ((row.key_json, row.value_json) for row in iterator)
+        return _ChunkCommit(
+            *publish_chunk(
+                self._backend,
+                self.path,
+                TaskContext.get().partitionId(),
+                self._write_id,
+                pairs,
+            )
+        )
 
     def commit(self, messages) -> None:
-        from map_reduce_ruby_spark.sources.storage import join_uri
-
-        backend = self._backend
-        backend.makedirs(self.path)
-        # _MANIFEST.json: the authoritative partition->file map, built from
-        # the tasks' commit messages (no listing). Describes THIS write —
-        # one COMPLETED generation per directory. The primary guard runs at
-        # writer construction (before tasks — see __init__); re-checking
-        # here closes the window where a CONCURRENT writer completed a
-        # generation between our plan time and our commit: because chunk
-        # filenames are generation-unique (write-id suffix), the other
-        # writer's files are untouched by ours — losing this race leaves
-        # only our own strays, never a corrupted winner.
-        self._refuse_completed_generation()
-        files = sorted(
+        commit_generation(
+            self._backend,
+            self.path,
+            self._write_id,
             (
-                {"partition": int(m.partition_id), "file": m.filename, "rows": int(m.rows)}
+                (m.partition_id, m.filename, m.rows)
                 for m in messages
-                if m is not None and m.filename is not None
+                if m is not None
             ),
-            key=lambda e: e["partition"],
         )
-        manifest = {
-            "format": "mr_chunks/1",
-            "write_id": self._write_id,
-            "files": files,
-        }
-        backend.write_text_atomic(
-            join_uri(self.path, MANIFEST_NAME),
-            json.dumps(manifest, separators=(",", ":")) + "\n",
-        )
-        # success marker ('_'-prefixed => skipped by readers): consumers gate
-        # on it to distinguish a completed write from a killed-mid-flight one
-        backend.write_text_atomic(join_uri(self.path, "_SUCCESS"), "")
 
     def abort(self, messages) -> None:
-        # BEST-EFFORT unpublish of chunks that successful tasks already
-        # placed before the job failed. Spark only delivers the commit
-        # messages it had recorded when the job aborted — a task that
-        # published its file moments before the failure may not be in the
-        # list (observed in local mode), so strays CAN survive abort.
-        # That is why _MANIFEST.json is the authoritative path map and
-        # _SUCCESS gates consumers: a stray chunk file never enters
-        # either. delete() is an optional backend operation; backends
-        # without it skip cleanup entirely.
-        from map_reduce_ruby_spark.sources.storage import join_uri
-
-        delete = getattr(self._backend, "delete", None)
-        if delete is None:
-            return
-        for m in messages:
-            if m is not None and getattr(m, "filename", None):
-                try:
-                    delete(join_uri(self.path, m.filename))
-                except OSError:
-                    pass
+        # Spark only delivers the commit messages it had recorded when the
+        # job aborted — a task that published its file moments before the
+        # failure may not be in the list (observed in local mode), so
+        # strays CAN survive abort. That is why _MANIFEST.json is the
+        # authoritative path map and _SUCCESS gates consumers.
+        unpublish_chunks(
+            self._backend,
+            self.path,
+            [m.filename for m in messages if m is not None and m.filename],
+        )
 
 
 class ChunkDataSource(DataSource):
@@ -524,5 +547,10 @@ class ChunkDataSource(DataSource):
 
 
 def register_chunk_source(spark) -> None:
-    """Idempotently register the mr_chunks format on this session."""
-    spark.dataSource.register(ChunkDataSource)
+    """Idempotently register the mr_chunks format on this session: a second
+    call finds it in the session's data source manager and registers
+    nothing (re-registering makes the JVM log a "replaced a previously
+    registered data source" warning every time)."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(ChunkDataSource.name()):
+        spark.dataSource.register(ChunkDataSource)

@@ -3,13 +3,15 @@
 The reference's deployment story uploads partition files to a blob store
 between phases (reference README.md:60-67,78-84: mappers upload their
 partition files to S3, reducers download them). The cluster-real analog in
-this engine: executor tasks write chunk files straight to shared storage
-through the ``mr_chunks`` writer, each task reports (partition, file, rows)
-in its ``WriterCommitMessage``, and the driver's commit publishes a
-``_MANIFEST.json`` built from those messages. The partition->path map is
-then read from the manifest — never from a directory listing — so the
-handoff works against any storage a backend can reach (the previous
-driver-side ``os.listdir`` only worked for locally-mounted paths).
+this engine: the last Python stage of ``Job.shuffle_to_files`` publishes
+each partition's chunk file straight to shared storage and returns one
+(partition, file, rows) row; the driver collects those rows and publishes a
+``_MANIFEST.json`` built from them (``chunk_datasource.publish_chunk`` and
+``commit_generation``, the same two functions behind
+``df.write.format("mr_chunks")``, whose tasks report through a
+``WriterCommitMessage`` instead). The partition->path map is then read from
+the manifest — never from a directory listing — so the handoff works
+against any storage a backend can reach.
 
 A backend is any object with five small operations::
 
@@ -19,8 +21,8 @@ A backend is any object with five small operations::
     write_text_atomic(uri, text)       # readers never see a partial file
     put_file_atomic(local_path, uri)   # publish a finished local file
 
-plus an optional ``delete(uri)`` used by the writer's abort cleanup
-(backends without it simply skip unpublishing on job failure), and an
+plus an optional ``delete(uri)`` used to unpublish a failed write's chunks
+(backends without it simply skip that cleanup), and an
 optional ``list(dir_uri) -> list[str]`` (direct child file NAMES, sorted)
 that lets the chunk READERS — batch and streaming — resolve a directory
 through the backend, so a stream can tail an ``s3://`` drop prefix the same
@@ -378,9 +380,10 @@ def register_storage_backend(scheme: str, backend: object) -> None:
     """Make ``scheme://`` URIs usable by the chunk handoff. The backend
     object must provide the five operations in the module docstring and be
     PICKLABLE: registration happens on the driver only —
-    ``Job.shuffle_to_files`` resolves the backend here and ships it to the
-    writer's worker processes as a cloudpickle option (pickle_backend), so
-    no other process ever needs registry setup (an s3 client wrapper
+    ``Job.shuffle_to_files`` resolves the backend here and ships it to its
+    tasks inside their closure (a ``df.write.format("mr_chunks")`` caller
+    passes it as the ``backend_pickle`` option, see pickle_backend), so no
+    other process ever needs registry setup (an s3 client wrapper
     implements ``__reduce__`` to reconnect lazily on the worker)."""
     _BACKENDS[scheme.lower()] = backend
 

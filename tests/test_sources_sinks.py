@@ -1083,3 +1083,182 @@ def test_chunk_batch_reads_s3_uri_via_manifest(spark, tmp_path):
 
     with _pytest.raises(Exception, match="half-commit"):
         read_df("s3://bucket/half").collect()
+
+
+def test_register_chunk_source_is_idempotent(spark, tmp_path, monkeypatch):
+    """A second register_chunk_source call finds mr_chunks in the session's
+    data source manager and registers nothing (re-registering makes the JVM
+    warn that it replaced a registered data source); the format still
+    loads afterwards."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from map_reduce_ruby_spark.sources import register_chunk_source
+
+    register_chunk_source(spark)
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, source):
+        calls.append(source)
+        return real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    register_chunk_source(spark)
+    assert calls == []
+    d = tmp_path / "plain"
+    d.mkdir()
+    (d / "a.jsonl").write_text('["x",1]\n')
+    rows = [tuple(r) for r in spark.read.format("mr_chunks").load(str(d)).collect()]
+    assert rows == [('"x"', "1")]
+
+
+@pytest.mark.parametrize("via_arrow", [False, True], ids=["classic", "arrow"])
+def test_shuffle_to_files_failure_leaves_no_generation(
+    spark, tmp_path, monkeypatch, via_arrow
+):
+    """A failed shuffle_to_files publishes no _MANIFEST.json or _SUCCESS and
+    deletes every chunk file its attempt published, and a retry into the
+    same directory publishes a clean generation. Two failures: a map_fn
+    that raises in one partition (the map stage fails before any chunk is
+    published) and a fold that raises after the shuffle, in the last
+    partition, once the other partitions have published theirs — which is
+    what the driver's cleanup has to delete."""
+    import time
+
+    from map_reduce_ruby_spark.core.job import Job
+    from map_reduce_ruby_spark.sources.storage import LocalStorage
+
+    # HashPartitioner(4): omega -> 3; z -> 0, b -> 1, a and x -> 2
+    texts = ["omega z", "omega a", "b x"]
+
+    def inputs():
+        rdd = spark.sparkContext.parallelize(texts, len(texts))
+        if via_arrow:
+            return spark.createDataFrame(rdd.map(lambda t: (t,)), "t string")
+        return rdd
+
+    def words(text):
+        for w in text.split():
+            yield w, 1
+
+    def failing_map(text):
+        if text == "b x":
+            raise RuntimeError("map boom")
+        yield from words(text)
+
+    def failing_fold(key, a, b):
+        # "omega" meets itself only after the shuffle (one per input slice)
+        if key == "omega":
+            time.sleep(2)
+            raise RuntimeError("fold boom")
+        return a + b
+
+    deleted = []
+    real_delete = LocalStorage.delete
+
+    def spy(self, uri):
+        if os.path.exists(uri):
+            deleted.append(os.path.basename(uri))
+        real_delete(self, uri)
+
+    monkeypatch.setattr(LocalStorage, "delete", spy)
+    out = tmp_path / "gen"
+    add = lambda k, a, b: a + b  # noqa: E731
+    for map_fn, fold in ((failing_map, add), (words, failing_fold)):
+        job = Job(map_fn=map_fn, reduce_fn=fold, num_partitions=4)
+        with pytest.raises(Exception, match="boom"):
+            job.shuffle_to_files(spark, inputs(), str(out), via_arrow=via_arrow)
+        left = sorted(os.listdir(out)) if out.exists() else []
+        assert not [n for n in left if n.startswith(("chunk-", "_"))], left
+    # partitions 0-2 had published before the fold failed in partition 3
+    assert sorted(n[:11] for n in deleted) == [
+        "chunk-00000", "chunk-00001", "chunk-00002"
+    ], deleted
+
+    job = Job(map_fn=words, reduce_fn=add, num_partitions=4)
+    pmap = job.shuffle_to_files(spark, inputs(), str(out), via_arrow=via_arrow)
+    man = json.loads((out / "_MANIFEST.json").read_text())
+    chunks = sorted(n for n in os.listdir(out) if n.startswith("chunk-"))
+    assert chunks == sorted(e["file"] for e in man["files"])
+    assert all(man["write_id"] in n for n in chunks)
+    assert (out / "_SUCCESS").exists()
+    merged = dict(kv for p in pmap.values() for kv in read_chunk(p))
+    assert merged == {"omega": 2, "z": 1, "a": 1, "b": 1, "x": 1}
+
+
+def test_shuffle_to_files_publishes_without_datasource_writer(
+    spark, tmp_path, monkeypatch
+):
+    """shuffle_to_files publishes from its last Python stage, not through
+    the Python DataSource writer: with DataFrameWriter.save and
+    register_chunk_source made to raise, the classic path, the Arrow path
+    and the fake-s3:// backend still return the same partition map, and
+    their chunk bytes equal what df.write.format("mr_chunks") writes for the
+    same (key_json, value_json) rows."""
+    import functools
+    from pathlib import Path
+
+    from pyspark.sql import DataFrameWriter
+
+    import map_reduce_ruby_spark.sources as sources_pkg
+    from map_reduce_ruby_spark.core.job import Job
+    from map_reduce_ruby_spark.sources import chunk_datasource
+    from map_reduce_ruby_spark.sources.storage import (
+        S3FileClientDouble,
+        S3Storage,
+        _BACKENDS,
+        register_storage_backend,
+    )
+
+    def map_fn(text):
+        for w in text.split():
+            yield w, 1
+
+    texts = ["spark merge shuffle", "merge spark", "zed alpha merge", "alpha beta"]
+    job = Job(map_fn=map_fn, reduce_fn=lambda k, a, b: a + b, num_partitions=4)
+    docs = spark.createDataFrame([(t,) for t in texts], "t string")
+    s3_root = tmp_path / "s3root"
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("shuffle_to_files went through the DataSource API")
+
+    monkeypatch.setattr(DataFrameWriter, "save", refuse)
+    monkeypatch.setattr(chunk_datasource, "register_chunk_source", refuse)
+    monkeypatch.setattr(sources_pkg, "register_chunk_source", refuse)
+    monkeypatch.setattr(
+        "map_reduce_ruby_spark.core.job.register_chunk_source", refuse, raising=False
+    )
+    prior = _BACKENDS.get("s3")
+    register_storage_backend(
+        "s3", S3Storage(client_factory=functools.partial(S3FileClientDouble, str(s3_root)))
+    )
+    try:
+        maps = {
+            "classic": job.shuffle_to_files(spark, texts, str(tmp_path / "classic")),
+            "arrow": job.shuffle_to_files(
+                spark, docs, str(tmp_path / "arrow"), via_arrow=True
+            ),
+            "s3": job.shuffle_to_files(spark, texts, "s3://bucket/gen"),
+        }
+    finally:
+        register_storage_backend("s3", prior)
+    monkeypatch.undo()
+
+    # the reference: the same rows through the DataSource writer
+    chunk_datasource.register_chunk_source(spark)
+    rows = job.run(spark, texts).map(
+        lambda kv: (canonical_json(kv[0]), canonical_json(kv[1]))
+    )
+    ref_dir = tmp_path / "ref"
+    spark.createDataFrame(rows, chunk_datasource.CHUNK_SCHEMA).write.format(
+        "mr_chunks"
+    ).mode("append").save(str(ref_dir))
+    man = json.loads((ref_dir / "_MANIFEST.json").read_text())
+    ref = {e["partition"]: (ref_dir / e["file"]).read_bytes() for e in man["files"]}
+    assert len(ref) > 1
+
+    def local(uri):
+        return s3_root / uri[len("s3://"):] if uri.startswith("s3://") else Path(uri)
+
+    for name, pmap in maps.items():
+        assert {p: local(u).read_bytes() for p, u in pmap.items()} == ref, name
