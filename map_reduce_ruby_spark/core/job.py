@@ -77,56 +77,15 @@ def _hashable(k: Any) -> Any:
     return k
 
 
-def _kv_batch(pa, steers: list[int], ks: list[str], vs: list[str]):
+def _kv_batch(pa, pids: list[int], ks: list[str], vs: list[str]):
     return pa.record_batch(
         [
-            pa.array(steers, pa.int32()),
+            pa.array(pids, pa.int32()),
             pa.array(ks, pa.string()),
             pa.array(vs, pa.string()),
         ],
-        names=["steer", "k", "v"],
+        names=["pid", "k", "v"],
     )
-
-
-# partition index -> a steering int whose Spark hash lands exactly there;
-# deterministic for a given Spark version (murmur3, seed 42), computed once
-# per num_partitions per process
-_STEER_CACHE: dict[int, list[int]] = {}
-
-
-def _steering_ids(spark: SparkSession, nparts: int) -> list[int]:
-    """For each target partition p in [0, nparts), an int32 ``x`` with
-    ``pmod(hash(x), nparts) == p`` under Spark's HashPartitioning.
-
-    ``repartition(n, col)`` places a row at ``pmod(murmur3(col), n)`` — it
-    cannot be told "put this row at index p" directly. Writing the
-    partitioner's pid through this lookup makes the post-shuffle partition
-    INDEX equal the pid, which is what lets the Arrow path keep the
-    reference's partition->file contract (manifest partition ids == the
-    SHA1 placement) while shuffling entirely in the JVM."""
-    cached = _STEER_CACHE.get(nparts)
-    if cached is not None:
-        return cached
-    from pyspark.sql import functions as F
-
-    found: dict[int, int] = {}
-    base = 0
-    while len(found) < nparts:
-        probe = (
-            spark.range(base, base + max(1024, 64 * nparts))
-            .select(
-                F.col("id").cast("int").alias("x"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(nparts)).alias("p"),
-            )
-            .collect()  # bounded artifact: <= a few thousand (x, p) ints
-        )
-        for r in probe:
-            if r.p not in found:
-                found[int(r.p)] = int(r.x)
-        base += max(1024, 64 * nparts)
-    ids = [found[p] for p in range(nparts)]
-    _STEER_CACHE[nparts] = ids
-    return ids
 
 
 class Job:
@@ -248,8 +207,10 @@ class Job:
         """Arrow-batched execution of the SAME user protocol over a DataFrame:
         returns ``DataFrame(k string, v string)`` of canonical-JSON pairs,
         key-sorted within each partition when ``sort_output`` and placed so
-        that partition INDEX == ``self.partitioner(key)`` exactly (see
-        ``_steering_ids``).
+        that partition INDEX == ``self.partitioner(key) % num_partitions``
+        exactly: the map side writes that id into a column and Spark's
+        ``repartitionById`` sends each row to it. Building the plan runs no
+        Spark job.
 
         Same contract as ``run`` — user ``map_fn`` yields 0..n pairs per
         input, optional binary fold with map-side combine, SHA1-placement —
@@ -285,9 +246,9 @@ class Job:
         (its repartitionAndSortWithinPartitions is Spark's spilling
         external sort).
         """
-        return self._arrow_plan(spark, df, sort_output)
+        return self._arrow_plan(df, sort_output)
 
-    def _arrow_plan(self, spark: SparkSession, df: Any, sort_output: bool, publish=None):
+    def _arrow_plan(self, df: Any, sort_output: bool, publish=None):
         """``run_arrow``'s plan. With ``publish`` — a picklable
         ``(pid, pairs) -> (pid, file, rows)`` — the reduce-side
         ``mapInArrow`` hands each partition's canonical (k, v) JSON pairs to
@@ -302,7 +263,6 @@ class Job:
         # a partitioner returning values >= nparts is legal on run(); keep
         # the two paths contract-identical
         part = lambda k: raw_part(k) % nparts  # noqa: E731
-        steer = _steering_ids(spark, nparts)
         flush = COMBINE_FLUSH  # read per call: the closures ship this value
 
         def _rows(batch):
@@ -311,20 +271,20 @@ class Job:
 
         def map_side(batches):
             if reduce_fn is None:
-                steers: list[int] = []
+                pids: list[int] = []
                 ks: list[str] = []
                 vs: list[str] = []
                 for batch in batches:
                     for t in _rows(batch):
                         for k, v in map_fn(t):
-                            steers.append(steer[part(k)])
+                            pids.append(part(k))
                             ks.append(canonical_json(k))
                             vs.append(canonical_json(v))
                     if len(ks) >= flush:
-                        yield _kv_batch(pa, steers, ks, vs)
-                        steers, ks, vs = [], [], []
+                        yield _kv_batch(pa, pids, ks, vs)
+                        pids, ks, vs = [], [], []
                 if ks:
-                    yield _kv_batch(pa, steers, ks, vs)
+                    yield _kv_batch(pa, pids, ks, vs)
                 return
 
             # combine: dict keyed by the _hashable key form, whose grouping
@@ -336,10 +296,10 @@ class Job:
             rep: dict[Any, Any] = {}
 
             def drain():
-                steers = [steer[part(rep[hk])] for hk in acc]
+                pids = [part(rep[hk]) for hk in acc]
                 ks = [canonical_json(rep[hk]) for hk in acc]
                 vs = [canonical_json(v) for v in acc.values()]
-                return _kv_batch(pa, steers, ks, vs)
+                return _kv_batch(pa, pids, ks, vs)
 
             for batch in batches:
                 for t in _rows(batch):
@@ -412,12 +372,11 @@ class Job:
                     names=["k", "v"],
                 )
 
-        from pyspark.sql import functions as F
-
-        mapped = df.mapInArrow(map_side, schema="steer int, k string, v string")
-        # one JVM Tungsten exchange on the steering id; partition index ==
-        # partitioner(key) afterwards (O6 placement preserved end-to-end)
-        shuffled = mapped.repartition(nparts, F.col("steer"))
+        mapped = df.mapInArrow(map_side, schema="pid int, k string, v string")
+        # one JVM Tungsten exchange that sends each row to partition ``pid``
+        # itself, so partition index == partitioner(key) afterwards (O6
+        # placement preserved end-to-end)
+        shuffled = mapped.repartitionById(nparts, "pid")
         if publish is None:
             return shuffled.mapInArrow(reduce_side, schema="k string, v string")
 
@@ -493,7 +452,7 @@ class Job:
         and its reduce-side ``mapInArrow`` publishes the already-canonical
         (k, v) JSON strings. ``map_fn`` then sees ``run_arrow``'s plain row
         tuples and the fold JSON-roundtripped values, which is why the path
-        is chosen by the caller and not by input type. Steered placement
+        is chosen by the caller and not by input type. ``repartitionById``
         keeps partition index == ``partitioner(key)``, so the manifest's
         partition ids and each file's JSON-lines bytes are identical to the
         ``run`` path's (pinned by tests/test_job_arrow.py).
@@ -524,7 +483,7 @@ class Job:
 
         try:
             if via_arrow:
-                plan = self._arrow_plan(spark, inputs, sort_output=True, publish=publish)
+                plan = self._arrow_plan(inputs, sort_output=True, publish=publish)
                 published = plan.collect()  # bounded: one row per partition
             else:
                 result = self.run(spark, inputs, sort_output=True, stable=stable)

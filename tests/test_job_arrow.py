@@ -14,10 +14,8 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from map_reduce_ruby_spark.core import Job
-from map_reduce_ruby_spark.core.job import _steering_ids
+from map_reduce_ruby_spark.core import HashPartitioner, Job
 
 
 # NOTE: the map/reduce fns are built by a factory (not module-level defs):
@@ -32,10 +30,15 @@ def _mk_fns():
     def fold(key, a, b):
         return a + b
 
-    return map_wc, fold
+    def wild_part(key):
+        # deterministic across worker processes (unlike str hash), and
+        # returns values >= num_partitions as well as negative ones
+        return sum(map(ord, key)) % 101 - 50
+
+    return map_wc, fold, wild_part
 
 
-_map_wc, _fold = _mk_fns()
+_map_wc, _fold, _wild_part = _mk_fns()
 
 
 def _docs(spark, sf_dir):
@@ -62,28 +65,58 @@ def test_run_arrow_matches_rdd_path_no_reduce_duplicates_preserved(spark, sf_dir
     assert arrow == classic
 
 
-def test_run_arrow_partition_index_equals_partitioner(spark, sf_dir):
-    """The steered exchange must land every key at partition index ==
-    partitioner(key) — the reference's SHA1 placement contract (O6), held
-    through a pure-JVM shuffle."""
-    import pyarrow as pa
+def _partition_of_key(rows_by_partition, key_of):
+    return {key_of(r): pid for pid, rows in enumerate(rows_by_partition) for r in rows}
 
-    job = Job(map_fn=_map_wc, reduce_fn=_fold, num_partitions=16)
-    out = job.run_arrow(spark, _docs(spark, sf_dir))
 
-    def tag(batches):
-        from pyspark import TaskContext
+@pytest.mark.parametrize("num_partitions", [1, 2, 8, 32])
+@pytest.mark.parametrize("wild", [False, True], ids=["sha1", "wild"])
+def test_run_arrow_partition_index_equals_partitioner(spark, sf_dir, num_partitions, wild):
+    """repartitionById must land every key at partition index ==
+    partitioner(key) % num_partitions — the reference's SHA1 placement
+    contract (O6), held through a pure-JVM shuffle. A partitioner that
+    returns values >= num_partitions and negative ones lands where
+    ``run`` (pyspark's ``partitionFunc(k) % n``) puts it."""
+    raw = _wild_part if wild else HashPartitioner(num_partitions)
+    job = Job(
+        map_fn=_map_wc, reduce_fn=_fold, partitioner=raw, num_partitions=num_partitions
+    )
+    docs = _docs(spark, sf_dir)
+    arrow = job.run_arrow(spark, docs).rdd.glom().collect()
+    assert len(arrow) == num_partitions
+    placed = _partition_of_key(arrow, lambda r: json.loads(r.k))
+    assert placed and all(pid == raw(k) % num_partitions for k, pid in placed.items())
+    if wild:
+        assert min(map(raw, placed)) < 0 and max(map(raw, placed)) >= num_partitions
+    classic = job.run(spark, docs.rdd.map(lambda r: r[0])).glom().collect()
+    assert placed == _partition_of_key(classic, lambda kv: kv[0])
 
-        pid = TaskContext.get().partitionId()
-        for b in batches:
-            yield pa.record_batch(
-                [b.column(0), pa.array([pid] * b.num_rows, pa.int32())],
-                names=["k", "pid"],
-            )
 
-    part = job.partitioner
-    for r in out.mapInArrow(tag, schema="k string, pid int").collect():
-        assert part(json.loads(r.k)) == r.pid
+def test_run_arrow_plan_builds_without_a_spark_job(spark):
+    """Building run_arrow's plan for a num_partitions this session has not
+    used runs no Spark job (nothing is probed to place rows), and AQE
+    does not coalesce the exchange: a few rows still come out in
+    num_partitions partitions. A control job in the same job group proves
+    that the group's jobs are counted."""
+    import time
+
+    sc = spark.sparkContext
+    rows = spark.createDataFrame([(f"w{i} x{i % 3}",) for i in range(12)], "text string")
+    for n in (29, 32):
+        job = Job(map_fn=_map_wc, reduce_fn=_fold, num_partitions=n)
+        group = f"run-arrow-build-{n}-{os.getpid()}"
+        sc.setJobGroup(group, "run_arrow plan build")
+        try:
+            out = job.run_arrow(spark, rows)
+            sc.parallelize([1]).count()  # the control job
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        deadline = time.monotonic() + 10
+        while not sc.statusTracker().getJobIdsForGroup(group) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert len(out.rdd.glom().collect()) == n
 
 
 def test_run_arrow_partial_combine_flush_is_lossless(spark, sf_dir, monkeypatch):
@@ -109,18 +142,6 @@ def test_run_arrow_sorted_within_partition(spark, sf_dir):
     for part_rows in out.rdd.glom().collect():
         keys = [SortKey(json.loads(r.k)) for r in part_rows]
         assert keys == sorted(keys)
-
-
-def test_steering_ids_cover_every_partition(spark):
-    for n in (1, 2, 8, 32):
-        ids = _steering_ids(spark, n)
-        assert len(ids) == n
-        placed = (
-            spark.createDataFrame([(x,) for x in ids], "steer int")
-            .select(F.pmod(F.hash("steer"), F.lit(n)).alias("p"))
-            .collect()
-        )
-        assert sorted(r.p for r in placed) == list(range(n))
 
 
 def test_shuffle_to_files_via_arrow_bytes_match_classic(spark, sf_dir, tmp_path):

@@ -82,8 +82,10 @@ def test_no_reduce_preserves_multiset(spark, pairs):
 def test_run_arrow_matches_rdd_path_property(spark, key_class, data):
     """run_arrow must agree with run() on randomized legal-domain inputs —
     same grouping (1 == 1.0, arrays element-wise), same fold totals, same
-    SHA1 placement modulo num_partitions. Values ride the canonical-JSON
-    wire on the Arrow path, so the compare JSON-normalizes both sides."""
+    SHA1 placement modulo num_partitions and the same key order within
+    each partition, so each partition's contents are compared. Values ride
+    the canonical-JSON wire on the Arrow path, so the compare
+    JSON-normalizes both sides."""
     import json
 
     keys = _keys_by_class[key_class]
@@ -97,10 +99,10 @@ def test_run_arrow_matches_rdd_path_property(spark, key_class, data):
         partitioner=HashPartitioner(4),
         num_partitions=4,
     )
-    classic = sorted(
-        (json.dumps(k, separators=(",", ":")), v)
-        for k, v in job.run(spark, pairs).collect()
-    )
+    classic = [
+        [(json.dumps(k, separators=(",", ":")), v) for k, v in part]
+        for part in job.run(spark, pairs).glom().collect()
+    ]
 
     df = spark.createDataFrame(
         [(json.dumps([k, v]),) for k, v in pairs], "row string"
@@ -113,7 +115,8 @@ def test_run_arrow_matches_rdd_path_property(spark, key_class, data):
         partitioner=HashPartitioner(4),
         num_partitions=4,
     )
-    arrow = sorted(
-        (r.k, json.loads(r.v)) for r in arrow_job.run_arrow(spark, df).collect()
-    )
+    arrow = [
+        [(r.k, json.loads(r.v)) for r in part]
+        for part in arrow_job.run_arrow(spark, df).rdd.glom().collect()
+    ]
     assert arrow == classic
