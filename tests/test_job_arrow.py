@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 
@@ -98,8 +99,6 @@ def test_run_arrow_plan_builds_without_a_spark_job(spark):
     does not coalesce the exchange: a few rows still come out in
     num_partitions partitions. A control job in the same job group proves
     that the group's jobs are counted."""
-    import time
-
     sc = spark.sparkContext
     rows = spark.createDataFrame([(f"w{i} x{i % 3}",) for i in range(12)], "text string")
     for n in (29, 32):
