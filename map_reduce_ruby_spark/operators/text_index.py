@@ -210,18 +210,11 @@ def bm25_search(
     n_docs = int(meta["n_docs"])
     avgdl = float(meta["total_len"]) / n_docs if n_docs else 0.0
 
-    # literal bucket list -> partition pruning on tb (checked in tests)
-    buckets = sorted(
-        {
-            r.tb
-            for r in spark.createDataFrame([(t,) for t in terms], "term string")
-            .select(F.pmod(F.hash("term"), F.lit(n_buckets)).alias("tb"))
-            .collect()
-        }
-    )
+    # the terms' tb buckets as constant expressions: Catalyst folds them
+    # to a literal list, a partition filter on tb (checked in tests)
+    buckets = [F.pmod(F.hash(F.lit(t)), F.lit(n_buckets)) for t in terms]
     tf = postings.filter(
-        F.col("tb").isin([int(x) for x in buckets])
-        & F.col("term").isin(*terms)
+        F.col("tb").isin(*buckets) & F.col("term").isin(*terms)
     ).select("term", "doc_id", "tf", "dlen")
 
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

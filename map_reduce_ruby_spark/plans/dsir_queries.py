@@ -264,8 +264,9 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "u = (h32('dsir:'||doc_id)+0.5)/2^32, g = -ln(-ln(u)), snapped to "
     "the same 1e-3 int grid as the weights so selection compares exact "
     "integers. Spark plans TakeOrdered (per-partition top-k + k-row "
-    "driver merge), NOT a single-partition global window; k comes from "
-    "parquet-metadata count, integer arithmetic on both engines.",
+    "driver merge), NOT a single-partition global window; k is computed "
+    "at build time from a count of the distinct doc_ids in the "
+    "session-cached feature table, integer arithmetic on both engines.",
     tags=("pipeline", "dsir", "sampling", "extension"),
 )
 def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:

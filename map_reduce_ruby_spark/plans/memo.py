@@ -13,7 +13,8 @@ of outliving their dict slot.
 Capacity default 8: a session touches a handful of sf_dirs at most, and
 the memo must stay far below executor storage so eviction is about
 hygiene, not pressure. The generation store's attach memo
-(operators/artifact_store._ATTACH) is one more instance, at capacity 16.
+(operators/artifact_store._ATTACH) is one more instance, at capacity 16,
+and so is the table schema memo (sources/tables._SCHEMAS), at 64.
 """
 
 from __future__ import annotations

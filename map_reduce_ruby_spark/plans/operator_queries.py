@@ -682,10 +682,6 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_ruby_spark.sources.tables import table_fingerprint
 
     v = _ivf_vectors(spark, sf_dir)
-    if v.isEmpty():
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rn long"
-        )
     # Content-fingerprinted path (the dedup_persisted_index rule): a fresh
     # process recomputes the same path; a regenerated fixture invalidates it.
     # The builder version rides in the path too (and in the index's
@@ -699,6 +695,12 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), f"ivf_idx_v{IVF_INDEX_VERSION}_{tag}"
     )
     if not ivf_index_exists(path):
+        # emptiness is checked only on a miss: an index exists for this
+        # fingerprint only if its corpus was non-empty
+        if v.isEmpty():
+            return spark.createDataFrame(
+                [], "query_id long, neighbor_id long, cos_sim double, rn long"
+            )
         write_ivf_index(spark, v, path, k=None)
     assignments, centroids = load_ivf_index(spark, path)
     queries = v.filter(F.col("id") < _IVF_NQ).select(
@@ -1472,10 +1474,6 @@ def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_ruby_spark.sources.tables import table_fingerprint
 
     v = _ivf_vectors(spark, sf_dir)
-    if v.isEmpty():  # schema-stable empty result for an empty corpus
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rn long"
-        )
     tag = table_fingerprint(sf_dir, "embeddings")
     # the IVF root is SHARED with knn_ivf_persisted by design: both are
     # content-addressed to (builder version, fixture content), so whichever
@@ -1490,9 +1488,18 @@ def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc_path = os.path.join(
         tempfile.gettempdir(), f"ivfadc_idx_v{IVFADC_INDEX_VERSION}_{tag}"
     )
-    if not ivf_index_exists(ivf_path):
+    have_ivf = ivf_index_exists(ivf_path)
+    have_pq = pq_index_exists(pq_path, _IVF_DIM, _PQ_NSUB, _PQ_K)
+    # emptiness is checked only when a component is missing: both exist for
+    # this fingerprint only if its corpus was non-empty, and the composed
+    # table is built from them
+    if not (have_ivf and have_pq) and v.isEmpty():
+        return spark.createDataFrame(
+            [], "query_id long, neighbor_id long, cos_sim double, rn long"
+        )
+    if not have_ivf:
         write_ivf_index(spark, v, ivf_path, k=None)
-    if not pq_index_exists(pq_path, _IVF_DIM, _PQ_NSUB, _PQ_K):
+    if not have_pq:
         write_pq_index(
             spark, v, pq_path, dim=_IVF_DIM, n_sub=_PQ_NSUB, k=_PQ_K
         )

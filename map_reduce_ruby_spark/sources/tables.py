@@ -8,9 +8,13 @@ pushdown and column pruning for free.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from map_reduce_ruby_spark.plans.memo import LruMemo
 
 TABLES = [
     "region",
@@ -25,8 +29,34 @@ TABLES = [
     "embeddings",
 ]
 
+# The session confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# Inferred table schemas (StructType only, never a DataFrame). Inference
+# reads parquet footers in a Spark job; a memo hit reads with the schema
+# given, which runs none.
+_SCHEMAS = LruMemo(capacity=64)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One fixture table as a fresh DataFrame (self-joins keep distinct
+    attribute ids), with the session time zone pinned to UTC and, for
+    ``events``, ``ts`` exposed as ``ts_ns``/``ts_us``/``ts``.
+
+    The parquet schema is inferred once per key of ``_SCHEMAS``: a weak
+    reference to the session, the table's ``table_fingerprint`` fields
+    (path, then name, size and mtime_ns of each data file) and the current
+    values of ``_SCHEMA_CONFS``. Rewriting the table, changing one of those
+    confs or using another session is a miss; a hit builds the frame
+    without running a Spark job. A path with no local data files (a
+    missing table, a remote URI) is read without the memo, so it raises
+    or lists exactly as ``spark.read.parquet`` does."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     # Oracle comparisons require UTC: DuckDB is timezone-naive, and several
@@ -65,7 +95,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass  # fall through; the dtype branch below handles either form
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        fields = _fingerprint_fields(sf_dir, name)
+    except OSError:
+        df = spark.read.parquet(path)
+    else:
+        key = (
+            weakref.ref(spark),
+            fields,
+            tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
+        )
+        schema = _SCHEMAS.get_or_build(key, lambda: spark.read.parquet(path).schema)
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
         # Expose: ts_ns (exact nanos), ts_us (= DuckDB epoch_us(ts) — same
         # ns -> µs truncation), and ts as a real microsecond timestamp.
@@ -97,8 +139,12 @@ def table_fingerprint(sf_dir: str, name: str = "documents") -> str:
     fixture at sf_dir is regenerated, the fingerprint changes, so a stale
     cache under /tmp can never silently serve results derived from the old
     data — the failure mode a path-only tag had."""
-    import hashlib
+    return hashlib.md5("|".join(_fingerprint_fields(sf_dir, name)).encode()).hexdigest()[:12]
 
+
+def _fingerprint_fields(sf_dir: str, name: str) -> tuple[str, ...]:
+    """The table's absolute path, then "name:size:mtime_ns" of each data
+    file in name order. FileNotFoundError when there is no data file."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     parts = [os.path.abspath(path)]
     files = (
@@ -122,4 +168,4 @@ def table_fingerprint(sf_dir: str, name: str = "documents") -> str:
     for f in files:
         st = os.stat(f)
         parts.append(f"{os.path.basename(f)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+    return tuple(parts)

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+import time
 
 import pytest
 
@@ -44,3 +46,46 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(build)`` -> ``(build(), number of Spark jobs build ran)``.
+
+    The jobs are counted in a job group of their own. A control job closes
+    the group and must be seen in it, which proves the count works. A
+    sentinel job in a second group is awaited before counting; listener
+    events arrive in order, so by then every job of the group is recorded.
+    The control and the sentinel count an empty RDD: a job with no task."""
+    sc = spark.sparkContext
+    serial = itertools.count()
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def count(build):
+        group = f"count-jobs-{os.getpid()}-{next(serial)}"
+
+        def build_then_control():
+            out = build()
+            sc.emptyRDD().count()
+            return out
+
+        out = in_group(group, build_then_control)
+        in_group(f"{group}-sentinel", sc.emptyRDD().count)
+        deadline = time.monotonic() + 30
+        while (
+            not sc.statusTracker().getJobIdsForGroup(f"{group}-sentinel")
+            and time.monotonic() < deadline
+        ):
+            time.sleep(0.01)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert jobs, f"the control job of {group} was not counted"
+        return out, len(jobs) - 1
+
+    return count

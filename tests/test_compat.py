@@ -713,16 +713,11 @@ def test_reducer_incomparable_keys_across_chunks_raise_and_clean(spark, merge_te
     assert os.listdir(tmpdir) == []
 
 
-def test_shuffle_and_reduce_fire_no_spark_job(spark, tmp_path):
+def test_shuffle_and_reduce_fire_no_spark_job(spark, tmp_path, count_jobs):
     """The façade merges in-process: Mapper.shuffle and Reducer.reduce run
-    no Spark job. A control job in the same job group proves that the
-    group's jobs are counted."""
-    import time
+    no Spark job."""
 
-    sc = spark.sparkContext
-    group = f"compat-no-jobs-{os.getpid()}"
-    sc.setJobGroup(group, "compat merge")
-    try:
+    def map_shuffle_reduce():
         mapper = Mapper(_word_count(), spark, partitioner=HashPartitioner(2), memory_limit=64)
         for i in range(20):
             mapper.map(f"w{i % 3} x{i}")
@@ -730,12 +725,8 @@ def test_shuffle_and_reduce_fire_no_spark_job(spark, tmp_path):
         reducer = Reducer(_word_count(), spark)
         for path in parts.values():
             shutil.copyfile(path, reducer.add_chunk())
-        assert dict(reducer.reduce())["w0"] == 7
-        sc.parallelize([1]).count()  # the control job
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.monotonic() + 10
-    while not sc.statusTracker().getJobIdsForGroup(group) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        return dict(reducer.reduce())
+
+    counts, jobs = count_jobs(map_shuffle_reduce)
+    assert counts["w0"] == 7
+    assert jobs == 0

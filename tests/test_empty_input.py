@@ -67,6 +67,7 @@ REPRESENTATIVE = [
     "streaming_dedup_probe",        # zero arrivals -> schema-stable empty
     "dedup_sorted_neighborhood",    # empty record set -> schema-stable empty
     "corpus_constraint_checks",     # zero-row tables -> 7 zero-violation rows
+    "text_bm25_persisted",          # empty corpus -> no store write
 ]
 
 

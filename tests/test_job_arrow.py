@@ -11,8 +11,6 @@ identical results, identical partition placement, identical chunk bytes.
 from __future__ import annotations
 
 import json
-import os
-import time
 
 import pytest
 
@@ -93,28 +91,16 @@ def test_run_arrow_partition_index_equals_partitioner(spark, sf_dir, num_partiti
     assert placed == _partition_of_key(classic, lambda kv: kv[0])
 
 
-def test_run_arrow_plan_builds_without_a_spark_job(spark):
+def test_run_arrow_plan_builds_without_a_spark_job(spark, count_jobs):
     """Building run_arrow's plan for a num_partitions this session has not
     used runs no Spark job (nothing is probed to place rows), and AQE
     does not coalesce the exchange: a few rows still come out in
-    num_partitions partitions. A control job in the same job group proves
-    that the group's jobs are counted."""
-    sc = spark.sparkContext
+    num_partitions partitions."""
     rows = spark.createDataFrame([(f"w{i} x{i % 3}",) for i in range(12)], "text string")
     for n in (29, 32):
         job = Job(map_fn=_map_wc, reduce_fn=_fold, num_partitions=n)
-        group = f"run-arrow-build-{n}-{os.getpid()}"
-        sc.setJobGroup(group, "run_arrow plan build")
-        try:
-            out = job.run_arrow(spark, rows)
-            sc.parallelize([1]).count()  # the control job
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        deadline = time.monotonic() + 10
-        while not sc.statusTracker().getJobIdsForGroup(group) and time.monotonic() < deadline:
-            time.sleep(0.05)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        out, jobs = count_jobs(lambda: job.run_arrow(spark, rows))
+        assert jobs == 0
         assert len(out.rdd.glom().collect()) == n
 
 

@@ -6,6 +6,7 @@ row-identical compaction, and batch_id idempotency.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,16 +105,30 @@ def test_append_maintains_additive_stats_exactly(spark, sf_dir, split, tmp_path)
 
 
 def test_probe_scan_is_partition_pruned_to_term_buckets(
-    spark, sf_dir, split, tmp_path
+    spark, sf_dir, split, tmp_path, count_jobs
 ):
+    """The scan's partition filter lists exactly the terms' tb buckets,
+    Spark's pmod(hash(term), n_buckets), and building the search on an
+    attached store runs no Spark job."""
     docs, _a, _b = split
     path = str(tmp_path / "bm25")
     write_bm25_index(spark, docs, path)
-    df = bm25_search(spark, path, _TERMS)
+    n_buckets = int(read_index_meta(path)["n_buckets"])
+    want = {
+        r.tb
+        for r in spark.createDataFrame([(t,) for t in _TERMS], "term string")
+        .select(F.pmod(F.hash("term"), F.lit(n_buckets)).alias("tb"))
+        .collect()
+    }
+    bm25_search(spark, path, _TERMS)  # attaches the store
+    df, jobs = count_jobs(lambda: bm25_search(spark, path, _TERMS))
+    assert jobs == 0
     plan = df._jdf.queryExecution().executedPlan().toString()
     scan = next(l for l in plan.splitlines() if "PartitionFilters" in l)
-    assert "tb" in scan.split("PartitionFilters")[1][:200], scan
-    assert "ingest" in scan.split("PartitionFilters")[1][:200], scan
+    filters = scan.split("PartitionFilters: [")[1].split("]")[0]
+    assert "ingest" in filters, scan
+    listed = re.search(r"tb#\d+ IN \(([\d, ]+)\)", filters)
+    assert listed and {int(b) for b in listed.group(1).split(",")} == want, scan
 
 
 def test_compaction_is_row_identical_and_survives_append(
