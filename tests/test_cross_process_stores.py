@@ -23,6 +23,8 @@ import pytest
 import sys
 import tempfile
 
+from map_reduce_ruby_spark.session import python_worker_confs
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _PRELUDE = """\
@@ -31,6 +33,7 @@ import json
 from map_reduce_ruby_spark.session import get_spark
 from pyspark.sql import functions as F
 spark = get_spark(app_name="xproc_child", shuffle_partitions=4)
+print("SOCK_DIR " + spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir"))
 sf_dir = {sf_dir!r}
 path = {path!r}
 """
@@ -58,6 +61,10 @@ def _run_child(body: str, sf_dir: str, path: str) -> str:
     finally:
         os.remove(sp)
     assert out.returncode == 0, out.stderr[-3000:]
+    (sock_dir,) = [l[len("SOCK_DIR "):] for l in out.stdout.splitlines() if l.startswith("SOCK_DIR ")]
+    # each session gets its own socket dir, removed when its process exits
+    assert sock_dir != python_worker_confs("local[4]")["spark.python.unix.domain.socket.dir"]
+    assert not os.path.exists(sock_dir)
     lines = [l for l in out.stdout.splitlines() if l.startswith("SUMMARY ")]
     assert len(lines) == 1, out.stdout
     return lines[0][len("SUMMARY "):]

@@ -16,9 +16,9 @@ import uuid
 import zipfile
 import zipimport
 
-from map_reduce_ruby_spark import _worker_daemon
 from pyspark.sql.datasource import DataSource
 
+from map_reduce_ruby_spark import _worker_daemon
 from map_reduce_ruby_spark.session import python_worker_confs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
